@@ -377,8 +377,8 @@ def near_dup_pairs(
 # sub-second pipelines); above it, recomputing the minhash transforms
 # per side dominates and the single materialization wins (57.6→11.5s
 # at the 100× decade). Same adaptive-impl discipline as
-# similarity_search.adaptive_codebook — bit-identical either way,
-# wall-clock only.
+# similarity_search.semantic_dedup_frame's 50k pair-stage gate —
+# bit-identical either way, wall-clock only.
 CHECKPOINT_MIN_CORPUS = 50_000
 
 

@@ -61,38 +61,23 @@ from pyspark.sql import functions as F
 N_PLANES = 8
 DIM = 64
 
-# Adaptive IVF codebook gate — the ONE place the c = max(16, isqrt(n))
-# formula and the BNLJ/Arrow assignment crossover live. ivf_assign's
-# adaptive branch, semantic_dedup_frame, and callers that size the
-# codebook themselves (plans/datapipe.cluster_balanced_sample) all
-# derive from here, so the formula cannot silently drift between the
-# kernel and a call site while the SQL oracles (which state it
-# independently as GREATEST(16, FLOOR(SQRT(n)))) keep checking it.
+# Adaptive IVF codebook size — the ONE place the c = max(16, isqrt(n))
+# formula lives. ivf_assign's adaptive branch, semantic_dedup_frame,
+# and callers that size the codebook themselves
+# (plans/datapipe.cluster_balanced_sample) all derive from here, so
+# the formula cannot silently drift between the kernel and a call
+# site while the SQL oracles (which state it independently as
+# GREATEST(16, FLOOR(SQRT(n)))) keep checking it.
 MIN_CENTROIDS = 16
-# RETIRED GATE (round 14): BNLJ_ASSIGN_MAX_N = 8_000 used to route
-# small corpora (n < 8k) through the JVM packed-long BNLJ argmax, from
-# an early-round full-query A/B at n=2k (1.26s bnlj vs 1.62s arrow).
-# Re-measured round 14 across EVERY registered consumer (ann_ivf_topk,
-# ann_pq_topk, ann_rerank_crossencoder, ann_ivf2_topk,
-# ann_ivf_filtered_topk, semantic_dedup, cluster_balanced_sample,
-# prototypicality_pruning, d4_selection; interleaved min-of-5,
-# outputs identical): at n=5000 the Arrow kernel wins ALL NINE
-# (family total 11.36 -> 9.46s; e.g. d4 2.06 -> 1.41s), and at n=500
-# it is a wash (mixed ±0.1s, sum still favors arrow). The early
-# reading predates the warm-worker amortization the per-PID state
-# and the other kernels now provide. One code path — the 100 TB
-# path — at every scale; the "bnlj" impl stays forceable for parity
-# tests and A/B (ivf_assign(impl="bnlj")). Tables in SCALE.md
-# §Round 14.
-BNLJ_ASSIGN_MAX_N = 0
 
 
 def adaptive_codebook(n: int) -> tuple[int, str]:
-    """(n_centroids, assign_impl) for a corpus of ``n`` vectors."""
+    """(n_centroids, assign_impl) for a corpus of ``n`` vectors. The
+    assignment is the Arrow kernel at every n; the second element
+    names it for the scale-branch reports that read it."""
     import math
 
-    c = max(MIN_CENTROIDS, math.isqrt(n))
-    return c, ("bnlj" if n < BNLJ_ASSIGN_MAX_N else "arrow")
+    return max(MIN_CENTROIDS, math.isqrt(n)), "arrow"
 
 
 MIN_COARSE = 4
@@ -438,6 +423,43 @@ def bucket_frame(
     )
 
 
+def _coalesced_matrix(arrs, dim: int):
+    """(rows, dim) float64 matrix of one Arrow batch of embedding
+    arrays, with unpack_exprs' COALESCE(x, 0.0) semantics — the input
+    stage both LSH kernels share. Contract rows (dense, full-length,
+    non-null) take one vectorized stack. A batch with any malformed
+    row (null vector, short or long vector, None elements arriving as
+    an object array) builds per ROW instead, so one bad row never
+    changes its batch neighbors' values: a null vector reads all
+    0.0, a short one is zero-padded, a long one truncated to ``dim``.
+    Null ELEMENTS reach Python as NaN on both branches (pyarrow's
+    null/NaN collapse for float lists, even inside object-dtype
+    batches) and map to 0.0 on both, so a row's value never depends
+    on which branch its batch took; a true-NaN input, which is
+    indistinguishable after the Arrow boundary, also reads 0.0."""
+    import numpy as np
+
+    try:
+        V = np.stack(arrs)
+    except (ValueError, TypeError):  # ragged or null rows
+        V = None
+    if V is not None and V.dtype != object and V.shape == (len(arrs), dim):
+        V = V.astype(np.float64)
+        if np.isnan(V).any():
+            np.nan_to_num(V, copy=False, nan=0.0, posinf=np.inf, neginf=-np.inf)
+        return V
+    V = np.zeros((len(arrs), dim), dtype=np.float64)
+    for r, a in enumerate(arrs):
+        if a is None:
+            continue
+        row = np.asarray(
+            [0.0 if x is None else x for x in list(a)[:dim]], dtype=np.float64
+        )
+        np.nan_to_num(row, copy=False, nan=0.0, posinf=np.inf, neginf=-np.inf)
+        V[r, : len(row)] = row
+    return V
+
+
 def bucket_wide_arrow(
     embeddings: DataFrame,
     n_planes: int,
@@ -470,17 +492,9 @@ def bucket_wide_arrow(
     0.0 + x == x for every x except -0.0, whose sign cannot flip the
     >= 0.0 sign test — so every intermediate double equals the JVM's
     left-to-right `v_0*c_0 + v_1*c_1 + ...`; the bucket is an exact
-    integer sum of 2^k terms. Short/null-element rows follow
-    unpack_exprs' COALESCE(x, 0.0) semantics via the padded fallback
-    (contract: embeddings are dense non-null; the fallback only
-    keeps malformed rows loud-free the same way the JVM form did).
-    Null ELEMENTS inside a float vector reach Python as NaN on BOTH
-    paths (Arrow null/NaN collapse) and are mapped to 0.0 everywhere
-    (round-15 ADVICE: restores the JVM form's COALESCE semantics for
-    the null case — the one real data can produce — at the cost of a
-    true-NaN input also reading 0.0; the two are indistinguishable
-    after the Arrow boundary, and one rule on both paths keeps a
-    row's bucket independent of which batch it rode in)."""
+    integer sum of 2^k terms. Malformed rows (null, short or
+    null-element vectors) follow unpack_exprs' COALESCE(x, 0.0)
+    semantics (:func:`_coalesced_matrix`)."""
     import numpy as np
 
     P = np.array(
@@ -493,45 +507,7 @@ def bucket_wide_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            arrs = pdf[vec_col].to_numpy()
-            try:
-                V = np.stack(arrs)
-                if V.dtype == object:
-                    # clean-SHAPED rows with None elements: astype
-                    # would silently turn None into NaN; the per-row
-                    # path below applies COALESCE 0.0 instead.
-                    raise ValueError("non-numeric elements")
-                V = V.astype(np.float64)
-                if V.ndim != 2 or V.shape[1] != dim:
-                    raise ValueError("ragged")
-                # Dense-path COALESCE(x, 0.0) for null elements that
-                # arrived as NaN (round-15 ADVICE, docstring above);
-                # the isnan guard keeps the contract path (all
-                # finite) free of the in-place rewrite.
-                if np.isnan(V).any():
-                    np.nan_to_num(V, copy=False, nan=0.0,
-                                  posinf=np.inf, neginf=-np.inf)
-            except Exception:
-                # Per-ROW fallback (round 14, per ADVICE): one
-                # malformed row must not change its batch neighbors'
-                # semantics. None/null/NaN elements map to 0.0 —
-                # pyarrow delivers a float list's null elements as
-                # NaN even inside object-dtype batches, so mapping
-                # only None here would make a null element's bucket
-                # depend on WHICH path (dense vs fallback) its batch
-                # rode; both paths apply the same COALESCE(x, 0.0)
-                # (round 15, docstring above).
-                V = np.zeros((len(arrs), dim), dtype=np.float64)
-                for r, a in enumerate(arrs):
-                    if a is None:
-                        continue
-                    row = np.asarray(
-                        [0.0 if x is None else x for x in list(a)[:dim]],
-                        dtype=np.float64,
-                    )
-                    np.nan_to_num(row, copy=False, nan=0.0,
-                                  posinf=np.inf, neginf=-np.inf)
-                    V[r, : len(row)] = row
+            V = _coalesced_matrix(pdf[vec_col].to_numpy(), dim)
             n = V.shape[0]
             bucket = np.zeros(n, dtype=np.int64)
             for kk in range(n_planes):
@@ -579,17 +555,8 @@ def buckets_multi_arrow(
     left-to-right chain), sign test ``>= 0.0``, bucket as an exact
     integer sum of 2^k terms; the plane matrix of table ``t`` is
     ``_plane(k, t)`` — the same constants bucket_frame's literal array
-    carries. Fully-null and ragged rows take the per-ROW
-    COALESCE(x, 0.0) fallback (one bad row never changes its batch
-    neighbors' path — the round-14 ADVICE rule); a null ELEMENT inside
-    a full-length vector arrives as NaN at the Arrow boundary
-    (null/NaN collapse for float lists) and is mapped to 0.0 on BOTH
-    paths (round-15 ADVICE: restores the pre-round-14 deep path's
-    COALESCE semantics for the null case; a true NaN input —
-    indistinguishable after the boundary — also reads 0.0, and one
-    rule on both paths keeps a row's buckets independent of which
-    batch it rode in). Same edge behavior as
-    :func:`bucket_wide_arrow`."""
+    carries. Malformed rows follow the same COALESCE(x, 0.0)
+    semantics through :func:`_coalesced_matrix`."""
     import numpy as np
 
     PS = [
@@ -605,34 +572,7 @@ def buckets_multi_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            arrs = pdf[vec_col].to_numpy()
-            try:
-                V = np.stack(arrs)
-                if V.dtype == object:
-                    raise ValueError("non-numeric elements")
-                V = V.astype(np.float64)
-                if V.ndim != 2 or V.shape[1] != dim:
-                    raise ValueError("ragged")
-                # Dense-path COALESCE(x, 0.0) for null elements that
-                # arrived as NaN (round-15 ADVICE, docstring above).
-                if np.isnan(V).any():
-                    np.nan_to_num(V, copy=False, nan=0.0,
-                                  posinf=np.inf, neginf=-np.inf)
-            except Exception:
-                # Same per-row COALESCE(x, 0.0) as bucket_wide_arrow,
-                # incl. NaN (null elements arrive as NaN even in
-                # object-dtype batches — round 15, docstring above).
-                V = np.zeros((len(arrs), dim), dtype=np.float64)
-                for r, a in enumerate(arrs):
-                    if a is None:
-                        continue
-                    row = np.asarray(
-                        [0.0 if x is None else x for x in list(a)[:dim]],
-                        dtype=np.float64,
-                    )
-                    np.nan_to_num(row, copy=False, nan=0.0,
-                                  posinf=np.inf, neginf=-np.inf)
-                    V[r, : len(row)] = row
+            V = _coalesced_matrix(pdf[vec_col].to_numpy(), dim)
             n = V.shape[0]
             out = {id_col: pdf[id_col].to_numpy()}
             for t in range(n_tables):
@@ -660,6 +600,15 @@ def buckets_multi_arrow(
         + ", ".join(f"v_{i} double" for i in range(dim))
     )
     return embeddings.select(id_col, vec_col).mapInPandas(fn, schema=schema)
+
+
+def _index_bytes(raw: DataFrame, n_vectors: int | None, dim: int) -> int:
+    """Byte size of an LSH index input for the repartition gate: from
+    the caller-known row count when given (zero py4j or optimizer
+    work), else the optimizer's planning-time estimate."""
+    if n_vectors is not None:
+        return n_vectors * (dim * 8 + 16)
+    return int(raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def ann_topk(
@@ -733,16 +682,7 @@ def ann_topk(
         # the byte-based file splitter would not provide — placed
         # BELOW the Arrow kernel so the per-batch numpy work spreads
         # too.
-        if n_vectors is not None:
-            nbytes = n_vectors * (dim * 8 + 16)
-        else:
-            try:
-                nbytes = int(
-                    raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-                )
-            except Exception:
-                nbytes = 1 << 60
-        small = nbytes <= 32 * 1024 * 1024
+        small = _index_bytes(raw, n_vectors, dim) <= 32 * 1024 * 1024
         if not small:
             raw = raw.repartition(n_parts, F.col("vec_id"))
         bb = bucket_wide_arrow(
@@ -802,16 +742,7 @@ def ann_topk(
     # kernel spreads both the numpy batches and the downstream joins
     # (REPARTITION_BY_NUM — exempt from AQE byte-coalescing).
     raw = embeddings.selectExpr(f"{id_col} AS vec_id", f"{vec_col} AS _vec")
-    if n_vectors is not None:
-        nbytes = n_vectors * (dim * 8 + 16)
-    else:
-        try:
-            nbytes = int(
-                raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            nbytes = 1 << 60
-    if nbytes > 32 * 1024 * 1024:
+    if _index_bytes(raw, n_vectors, dim) > 32 * 1024 * 1024:
         n_parts = embeddings.sparkSession.sparkContext.defaultParallelism * 2
         if n_vectors is not None:
             n_parts = min(n_parts, max(8, -(-n_vectors // 2000)))
@@ -1025,7 +956,7 @@ def _local_cents_frame(spark, scalar_cols, prefix: str, M) -> DataFrame:
         StructType,
     )
 
-    n, dim = M.shape
+    dim = M.shape[1]
     tmap = {"bigint": LongType(), "int": IntegerType()}
     npmap = {"bigint": np.int64, "int": np.int32}
     fields = [StructField(nm, tmap[t], False) for nm, t, _ in scalar_cols]
@@ -1034,34 +965,11 @@ def _local_cents_frame(spark, scalar_cols, prefix: str, M) -> DataFrame:
     cols = {nm: arr.astype(npmap[t]) for nm, t, arr in scalar_cols}
     for i in range(dim):
         cols[f"{prefix}_{i}"] = M[:, i]
-    pdf = pd.DataFrame(cols)
-    # The pandas-with-Arrow path yields a true LocalRelation (values
-    # bit-exact through Arrow float64), so downstream broadcast builds
-    # collect driver-side with ZERO jobs; the conf is a runtime SQL
-    # conf, default-off on a vanilla session (the driver's), so set it
-    # for the createDataFrame call and restore. Fallback: an explicit
-    # 1-slice parallelize — RDD-backed, but each broadcast build is
-    # then one 1-task job instead of a cores-wide scan (PySpark's
-    # createDataFrame(list) parallelizes over defaultParallelism
-    # slices; measured 2 × 32-task jobs, 0.91 s of ann_ivf2_topk's
-    # sf0.1 wall).
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "true")
-        try:
-            return spark.createDataFrame(pdf, schema)
-        finally:
-            spark.conf.set(key, prev)
-    except Exception:
-        data = [
-            tuple(int(arr[r]) for _, _, arr in scalar_cols)
-            + tuple(float(x) for x in M[r])
-            for r in range(n)
-        ]
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(data, 1), schema
-        )
+    # With spark.sql.execution.arrow.pyspark.enabled (session.tune sets
+    # it on every session) the pandas frame converts through Arrow into
+    # a true LocalRelation — float64 values bit-exact — so downstream
+    # broadcast builds collect driver-side with zero jobs.
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
 
 
 def _half_up_exact(x):
@@ -1090,17 +998,20 @@ def _assign_cells_arrow(
     with_sim: bool = False,
     cmat: "tuple | None" = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment as ONE Arrow-batched numpy pass —
-    bit-identical to the packed-long BNLJ argmax (same left-to-right
-    accumulation order per dot/norm, same HALF_UP nano rounding, same
-    packed tie-break), ~15× faster at the 100× decade: the BNLJ
-    materializes n·c UnsafeRows of 2·dim doubles (≈90 GB at 200k×447)
-    and is memory-bandwidth-bound, while this path streams each
-    vector batch ONCE and does the n·c·dim flops in vectorized C.
-    The centroid matrix rides the task closure (c·dim doubles — the
-    same payload the BNLJ broadcasts) up to
-    CODEBOOK_CLOSURE_MAX_BYTES, an explicit Spark broadcast past it
-    (round 15, _CodebookCarrier). Returns (vec_id, cell), plus
+    """Nearest-centroid assignment as ONE Arrow-batched numpy pass:
+    each vector's winner is the centroid with the highest
+    ROUND(cos, 9), ties to the lowest cent_ix — the oracle's
+    ``ROW_NUMBER() OVER (ORDER BY cent_sim DESC, cent_id)``. Dots and
+    norms accumulate i-ascending (the JVM's left-to-right
+    ``v_0*c_0 + v_1*c_1 + ...``, so every intermediate double is the
+    same), the nano rounding is exact HALF_UP (_half_up_exact) and the
+    argmax is a max over packed (nanos, tie-break) longs. Streaming
+    each vector batch ONCE with the n·c·dim flops in vectorized C is
+    ~15× faster at the 100× decade than a JVM cross join, which
+    materializes n·c rows of 2·dim doubles (≈90 GB at 200k×447) and
+    is memory-bandwidth-bound. The centroid matrix rides the task
+    closure up to CODEBOOK_CLOSURE_MAX_BYTES, an explicit Spark
+    broadcast past it (_CodebookCarrier). Returns (vec_id, cell), plus
     the winner's cosine as ``proto_sim`` when ``with_sim`` — the
     packed key already carries round(sim·1e9), so emitting it is one
     integer unpack + divide, not a recompute; nanos/1e9 is the
@@ -1207,7 +1118,6 @@ def ivf_assign(
     vec_col: str = "embedding",
     centroids: str = "first",
     dim: int = DIM,
-    impl: str = "arrow",
     with_vectors: bool = True,
     n_rows: int | None = None,
     with_sim: bool = False,
@@ -1236,27 +1146,16 @@ def ivf_assign(
       not be; pinned by the registered queries.
     - ``"kmeans"``: train the codebook with MLlib KMeans (fixed seed,
       Euclidean objective) — the production path promised in SCALE.md.
-      The INDEX STRUCTURE is identical either way (cell assignment via
-      small-side broadcast join + argmin), and that is the part that
-      must scale. Trained centroids tile the data instead of echoing
-      the first rows — measured recall@10 at fixed nprobe in SCALE.md
-      §ANN recall, pinned by a unit test."""
+      The INDEX STRUCTURE is identical either way (the same packed
+      argmax cell assignment), and that is the part that must scale.
+      Trained centroids tile the data instead of echoing the first
+      rows — measured recall@10 at fixed nprobe in SCALE.md §ANN
+      recall, pinned by a unit test."""
     from pyspark.sql import Window
 
     if n_centroids is None:
-        n = embeddings.count()
-        # The adaptive branch also picks the assignment impl (shared
-        # via adaptive_codebook so ivf_topk/pq_topk inherit it) —
-        # since round 14 that is the Arrow kernel at every n (the
-        # BNLJ gate is retired; nine-consumer A/B at the
-        # BNLJ_ASSIGN_MAX_N definition; impls bit-identical, pinned
-        # by test). Callers that size the codebook themselves
-        # (n_centroids given) keep their impl choice — the auto pick
-        # rides the adaptive branch only.
-        n_centroids, auto_impl = adaptive_codebook(n)
-        if impl == "arrow":
-            impl = auto_impl
-        n_rows = n
+        n_rows = embeddings.count()
+        n_centroids, _ = adaptive_codebook(n_rows)
     # Lazy RDD persist on the scalar-column layout: base fans out to
     # MANY consumers (the assignment, the centroid slice, the PQ
     # encode stream and the PQ query table). One materialization
@@ -1281,17 +1180,14 @@ def ivf_assign(
         cents = _kmeans_cents(base, n_centroids, dim).withColumn(
             "cent_ix", F.row_number().over(cw) - 1
         )
-    elif impl == "arrow":
-        # The Arrow kernel needs the codebook matrix on the driver
-        # anyway, so ONE bounded collect (c rows ≈ √n·512 B adaptive)
-        # serves both the kernel closure and — below the shipping
-        # bound — a LOCAL cents frame for the probe/lookup consumers,
-        # removing the TakeOrdered-over-the-corpus pass + rank window
-        # every downstream broadcast re-plans. (Round 9 measured this
-        # localization SLOWER, 1.6 → 1.9 s, because back then the
-        # collect was an ADDED synchronous job; since the round-13/14
-        # kernels it is sunk cost — round 15 re-measured the local
-        # frame faster across the family, SCALE.md §Round 15.)
+    else:
+        # The kernel needs the codebook matrix on the driver anyway, so
+        # ONE bounded collect (c rows ≈ √n·512 B adaptive) serves both
+        # the kernel closure and — below the shipping bound — a LOCAL
+        # cents frame for the probe/lookup consumers, removing the
+        # TakeOrdered-over-the-corpus pass + rank window every
+        # downstream broadcast re-plans (measured faster across the
+        # family, SCALE.md §Round 15).
         import numpy as np
 
         rows = sorted(
@@ -1319,89 +1215,21 @@ def ivf_assign(
                 .selectExpr("vec_id AS cent_id", *rename_exprs("v", "c", dim))
                 .withColumn("cent_ix", F.row_number().over(cw) - 1)
             )
-    else:
-        cents = (
-            base.orderBy("vec_id")
-            .limit(n_centroids)
-            .selectExpr("vec_id AS cent_id", *rename_exprs("v", "c", dim))
-            .withColumn("cent_ix", F.row_number().over(cw) - 1)
-        )
-    # ARGMAX AS A PACKED-LONG MAX. Three formulations were measured at
-    # the 100x decade (200k vectors x 447 centroids = 89M rows):
-    # - row_number window over the wide pair stream: 403s (full
-    #   shuffle+sort of 89M rows with 64-double arrays);
-    # - max_by(cent_id, struct(sim, -cent_id)): 280s even on a NARROW
-    #   24-byte stream — struct-ordered max_by runs object-heavy /
-    #   interpreted per row, 100x slower than a plain long max;
-    # - pack (sim_nanos, tiebreak) into ONE bigint and take MAX: the
-    #   argmax rides a hash-agg with map-side combine over a Volcano
-    #   BNLJ + compiled UnsafeProjection (~13.5s for the 89M-row
-    #   assignment at the 100x decade in the scalar-column layout;
-    #   as arrays the same stage sat past the 8 KB JIT cliff and the
-    #   full query took 316s — module docstring). BNLJ never joins
-    #   whole-stage codegen in this Spark build (cross OR inner-true,
-    #   both measured Volcano), so the compiled projection is the
-    #   fast path available. Ordering is EXACTLY (sim desc,
-    #   cent_id asc):
-    #   nanos = round(sim*1e9) is the same monotone key the oracle's
-    #   ROUND(sim, 9) ordering uses, and (2^20 - cent_id) in the low
-    #   21 bits breaks ties toward the LOWEST centroid id. Bound:
-    #   (1e9 + 1e9) * 2^21 = 4.2e15 << 2^63; the tie-break field is
-    #   the dense cent_ix (0..c-1 < 2^20 for any c ≤ 2^20 centroids).
-    # Two bit-identical implementations (same packed key, same HALF_UP
-    # nanos, same accumulation order — equality pinned by a unit test):
-    # - "arrow" (default): one Arrow-batched numpy pass per partition,
-    #   centroid matrix in the task closure. The BNLJ materializes
-    #   n·c UnsafeRows of 2·dim doubles (~90 GB at the 100× decade)
-    #   and is memory-bandwidth-bound — measured 72.6s vs ~4s for the
-    #   same 89M-pair assignment; this is the "built-ins can't express
-    #   it efficiently" case the Pandas-UDF escape hatch exists for
-    #   (the op is a dense matmul).
-    # - "bnlj": the JVM packed-long argmax below, kept measurable for
-    #   A/B and for environments where the Python worker path is
-    #   unavailable.
-    if impl == "arrow":
-        cells = _assign_cells_arrow(base, cents, dim, with_sim=with_sim, cmat=cmat)
-    else:
-        raw = (
-            f"{dot_cols('v', 'c', dim)}"
-            f" / ({norm_cols('v', dim)} * {norm_cols('c', dim)})"
-        )
-        packed = F.expr(
-            f"(CAST(ROUND(({raw}) * 1000000000) AS BIGINT) + 1000000000L)"
-            f" * 2097152L + (1048576L - cent_ix)"
-        )
-        pairs = base.join(F.broadcast(cents), how="cross").select(
-            "vec_id", packed.alias("pk")
-        )
-        # ``with_sim``: the packed max already carries the winner's
-        # round(sim·1e9) in its high bits — unpack instead of re-joining
-        # centroids to recompute the dot (same rationale as the arrow
-        # impl; nanos/1e9 is the correctly-rounded double of n/10^9,
-        # identical to ROUND(sim, 9)).
-        sim_cols = (
-            [F.expr("CAST(pk DIV 2097152 - 1000000000 AS DOUBLE)").alias("_nanos")]
-            if with_sim
-            else []
-        )
-        cells = (
-            pairs.groupBy("vec_id")
-            .agg(F.max("pk").alias("pk"))
-            .select(
-                "vec_id",
-                (
-                    F.lit(1048576).cast("bigint")
-                    - F.pmod(F.col("pk"), F.lit(2097152))
-                ).alias("cell"),
-                *sim_cols,
-            )
-        )
-        if with_sim:
-            cells = cells.select(
-                "vec_id",
-                "cell",
-                (F.col("_nanos") / F.lit(1e9)).alias("proto_sim"),
-            )
+    # ARGMAX AS A PACKED-LONG MAX, in one Arrow-batched numpy pass per
+    # partition (_assign_cells_arrow). Ordering is EXACTLY
+    # (sim desc, cent_id asc): nanos = round(sim*1e9) is the same
+    # monotone key the oracle's ROUND(sim, 9) ordering uses, and
+    # (2^20 - cent_ix) in the low 21 bits breaks ties toward the
+    # LOWEST centroid (cent_ix is monotone in cent_id). Bound:
+    # (1e9 + 1e9) * 2^21 = 4.2e15 << 2^63; the tie-break field holds
+    # any c ≤ 2^20 centroids. A max over one long is associative,
+    # which is what lets the kernel cut centroids into blocks. This
+    # is the "built-ins can't express it efficiently" case the
+    # pandas-UDF escape hatch exists for: the op is a dense matmul,
+    # and the JVM cross-join form (n·c rows of 2·dim doubles, ~90 GB
+    # at the 100× decade) measured 72.6 s vs ~4 s for the same
+    # 89M-pair assignment (SCALE.md §Round 14).
+    cells = _assign_cells_arrow(base, cents, dim, with_sim=with_sim, cmat=cmat)
     assigned = base.join(cells, "vec_id") if with_vectors else cells
     return base, cents, assigned
 
@@ -1431,11 +1259,10 @@ def ivf_topk(
     codebook."""
     from pyspark.sql import Window
 
-    impl = "arrow"
     if n_centroids is None and n_vectors is not None:
-        n_centroids, impl = adaptive_codebook(n_vectors)
+        n_centroids, _ = adaptive_codebook(n_vectors)
     base, cents, assigned = ivf_assign(
-        embeddings, n_centroids, id_col, vec_col, centroids, dim, impl=impl,
+        embeddings, n_centroids, id_col, vec_col, centroids, dim,
         n_rows=n_vectors,
     )
     # queries probe their nprobe nearest cells; data vectors live in
@@ -1530,9 +1357,8 @@ def ivf_filtered_topk(
     exact integer/string comparison on both engines."""
     from pyspark.sql import Window
 
-    impl = "arrow"
     if n_centroids is None and n_vectors is not None:
-        n_centroids, impl = adaptive_codebook(n_vectors)
+        n_centroids, _ = adaptive_codebook(n_vectors)
     base, cents, assigned = ivf_assign(
         embeddings,
         n_centroids,
@@ -1540,7 +1366,6 @@ def ivf_filtered_topk(
         vec_col,
         "first",
         dim,
-        impl=impl,
         n_rows=n_vectors,
         extra_cols=(label_col,),
     )
@@ -1811,7 +1636,7 @@ def ivf2_topk(
     import numpy as np
 
     n = embeddings.count() if n_vectors is None else n_vectors
-    c, _impl = adaptive_codebook(n)
+    c, _ = adaptive_codebook(n)
     c1 = adaptive_coarse(c)
 
     # Checkpointed scalar-column layout (same construction ivf_assign
@@ -2140,9 +1965,9 @@ def semantic_dedup_frame(
     in-cell neighbors at or above the threshold and ``kept`` marks
     the representatives (n_dup_lower == 0).
 
-    Scale shape: the cell assignment is :func:`ivf_assign` (broadcast
-    codebook, packed-long argmax, map-side combine — measured at the
-    100x decade); the pairwise stage is a SELF-JOIN ON THE INT CELL
+    Scale shape: the cell assignment is :func:`ivf_assign` (one
+    Arrow pass, packed-long argmax — measured at the 100x decade);
+    the pairwise stage is a SELF-JOIN ON THE INT CELL
     KEY, so the candidate space is Σ|cell|² ≈ n²/c instead of n².
     With the adaptive c = max(16, isqrt(n)) codebook that is ~n^1.5
     comparisons total and expected per-cell occupancy √n — the same
@@ -2165,25 +1990,14 @@ def semantic_dedup_frame(
     # Crossover measured between 20k (join 2.41 vs arrow 2.60) and
     # 200k; the threshold sits at 50k. The count doubles as the
     # adaptive-c input so ivf_assign does not recount.
-    assign_impl = "arrow"
     n = n_rows
     if impl == "auto" or n_centroids is None:
         if n is None:
             n = embeddings.count()
         if impl == "auto":
             impl = "arrow" if n >= 50_000 else "join"
-        # Third adaptive switch off the same count: the ASSIGNMENT
-        # implementation (adaptive_codebook, shared with ivf_assign's
-        # own adaptive branch) — since round 14 this resolves to the
-        # Arrow kernel at every n (the BNLJ gate is retired; the
-        # round-14 nine-consumer A/B and the history live at the
-        # BNLJ_ASSIGN_MAX_N definition). The two impls are
-        # bit-identical (test_ivf_assign_arrow_matches_bnlj), so the
-        # gate was wall-only.
-        auto_c, auto_impl = adaptive_codebook(n)
         if n_centroids is None:
-            n_centroids = auto_c
-        assign_impl = auto_impl
+            n_centroids, _ = adaptive_codebook(n)
     # ``preassigned``: a (base, cents, assigned) trio from a caller
     # that already ran ivf_assign on the SAME corpus/codebook (the D4
     # composition shares one assignment between its SemDeDup and
@@ -2194,15 +2008,14 @@ def semantic_dedup_frame(
     else:
         base, cents, assigned = ivf_assign(
             embeddings, n_centroids, id_col, vec_col, centroids, dim,
-            impl=assign_impl, n_rows=n,
+            n_rows=n,
         )
     if impl == "arrow":
         return _semdedup_cells_arrow(assigned, threshold, dim)
     # LAZY RDD PERSIST before the self-join: the two join sides are
     # rename-divergent copies of `assigned`, so canonical-plan
     # matching finds no ReusedExchange and the 100x plan ran the
-    # n·c-row BNLJ argmax assignment TWICE (measured in the round-8
-    # profile). localCheckpoint dedupes every consumer at RDD level
+    # assignment TWICE (measured in the round-8 profile). localCheckpoint dedupes every consumer at RDD level
     # (the column-pruning lesson — cache() would serve cross-run hits
     # inside bench's min-of-n loop).
     ck = assigned.localCheckpoint(eager=False)

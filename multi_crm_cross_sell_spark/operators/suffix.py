@@ -33,8 +33,6 @@ dedup_clusters)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -49,21 +47,16 @@ def _ckpt(df: DataFrame, eager: bool = False) -> DataFrame:
     """Every suffix-module checkpoint goes through here, SERIALIZED
     (PySpark's MEMORY_AND_DISK = StorageLevel(useDisk, useMemory,
     deserialized=False)) rather than the localCheckpoint default of
-    deserialized row objects. Why: the round-11 storage probe
-    (tools/suffix_decade.py) measured 6.7 GB of block-store DISK
-    spill at the 100x decade (zero at 1x/10x) — the ~log2(cap)
-    retained history levels plus pos_map overflow the storage region
-    as deserialized objects, so the LCP walk re-reads evicted blocks
+    deserialized row objects. Why: the ~log2(cap) retained history
+    levels plus pos_map overflow the storage region as deserialized
+    objects at the 100x decade (6.7 GB of block-store disk spill,
+    tools/suffix_decade.py), so the LCP walk re-reads evicted blocks
     from disk mid-job. Serialized blocks are several times smaller
     for these narrow bigint rows and cheap to deserialize, trading a
-    little CPU to stay memory-resident. SPARK_GRAFT_SUFFIX_CKPT=plain
-    switches back for decade A/Bs."""
-    level = (
-        StorageLevel.MEMORY_AND_DISK_DESER
-        if os.environ.get("SPARK_GRAFT_SUFFIX_CKPT") == "plain"
-        else StorageLevel.MEMORY_AND_DISK
+    little CPU to stay memory-resident."""
+    return df.localCheckpoint(
+        eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
-    return df.localCheckpoint(eager=eager, storageLevel=level)
 
 
 def global_dense_rank(

@@ -2,17 +2,13 @@
 
 The reference runs a HuggingFace distilbart pipeline per account note
 (src/ml/summarizer.py:7-33, invoked row-at-a-time from
-src/orchestrator.py:285-288). The Spark-native shape is: Arrow-batched
-``mapInPandas`` with the model loaded ONCE per executor (lazy module
-global, the broadcast-weights pattern) and applied per batch — never
-per row, never on the driver.
-
-The transformer dependency is optional by design (this container has
-no HF libs): ``summarize_batch`` tries the real pipeline behind an
-import guard and otherwise falls back to a deterministic extractive
-summarizer — pick the sentence with the most tokens (first wins on
-ties) — so the Spark plumbing (schema, batch iteration, UDF signature)
-is real and testable, and an ANSI-SQL oracle can reproduce it exactly.
+src/orchestrator.py:285-288). The Spark-native shape is Arrow-batched
+``mapInPandas`` applied per batch — never per row, never on the
+driver. The summarizer is deterministic and extractive: pick the
+sentence with the most tokens (first wins on ties), so an ANSI-SQL
+oracle reproduces it exactly. A model-backed summarizer would slot
+into ``summarize_batch`` with its weights loaded once per Python
+worker.
 """
 
 from __future__ import annotations
@@ -22,56 +18,30 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-_HF_PIPELINE = None
-_HF_TRIED = False
-
 OUT_SCHEMA = (
     "doc_id bigint, summary string, n_sentences int, method string"
 )
 
 
-def _load_hf_pipeline():
-    """Executor-side lazy singleton (one load per Python worker)."""
-    global _HF_PIPELINE, _HF_TRIED
-    if _HF_TRIED:
-        return _HF_PIPELINE
-    _HF_TRIED = True
-    try:  # pragma: no cover - transformers not installed in this env
-        from transformers import pipeline
-
-        _HF_PIPELINE = pipeline("summarization", model="sshleifer/distilbart-cnn-12-6")
-    except Exception:
-        _HF_PIPELINE = None
-    return _HF_PIPELINE
-
-
 def extractive_summary(text: str) -> tuple[str, int]:
-    """Deterministic fallback: the sentence with the most whitespace
-    tokens; first sentence wins ties. Returns (summary, n_sentences)."""
+    """The sentence with the most whitespace tokens; first sentence
+    wins ties. Returns (summary, n_sentences)."""
     sentences = text.split(". ")
     lens = [len(s.split(" ")) for s in sentences]
     return sentences[lens.index(max(lens))], len(sentences)
 
 
 def summarize_batch(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    pipe = _load_hf_pipeline()
     for pdf in frames:
-        if pipe is not None:  # pragma: no cover - real model path
-            outs = pipe(list(pdf["text"]), truncation=True)
-            summaries = [o["summary_text"] for o in outs]
-            n_sent = [len(t.split(". ")) for t in pdf["text"]]
-            method = "distilbart"
-        else:
-            pairs = [extractive_summary(t) for t in pdf["text"]]
-            summaries = [p[0] for p in pairs]
-            n_sent = [p[1] for p in pairs]
-            method = "extractive"
+        pairs = [extractive_summary(t) for t in pdf["text"]]
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
-                "summary": summaries,
-                "n_sentences": pd.array(n_sent, dtype="int32"),
-                "method": method,
+                "summary": [p[0] for p in pairs],
+                "n_sentences": pd.array(
+                    [p[1] for p in pairs], dtype="int32"
+                ),
+                "method": "extractive",
             }
         )
 

@@ -220,7 +220,12 @@ def cross_sell_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     unguarded FLOOR/SUM, silently dropping the dsum overflow + NaN
     traps — the guarded fragment restores the loud-on-both-surfaces
     contract of plans/_parity.py with the same floor(x*100+0.5)
-    integer units.
+    integer units. estimated_value rounds as ROUND(x * 100D) / 100D,
+    the oracle's ROUND(x, 2) formula: Spark's two-place ROUND rounds
+    the double's decimal string HALF_UP, DuckDB rounds x·100 half
+    away from zero, and the two differ when x·100 lands exactly on a
+    .5 that x's own decimal string does not show
+    (349230.58499999996 · 100 = 34923058.5 at sf0.1).
 
     Scale notes unchanged from rounds 9-11: rank-first cap (the
     aggregate sees only top-k customers via a broadcast semi-filter),
@@ -336,7 +341,8 @@ def cross_sell_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN same_segment >= 1.0D THEN 'Segment Expansion'
                     WHEN same_region < 1.0D THEN 'Market Development'
                     ELSE 'Partner Referral' END AS recommendation_type,
-               ROUND(0.1D * (spend1 + spend2), 2) AS estimated_value,
+               ROUND(0.1D * (spend1 + spend2) * 100D) / 100D
+                 AS estimated_value,
                CASE WHEN score >= 0.8D THEN 'Schedule joint executive briefing'
                     WHEN score >= 0.6D THEN 'Arrange partner introduction call'
                     WHEN score >= 0.4D THEN 'Share co-marketing materials'

@@ -1610,11 +1610,10 @@ FROM l
     tags=("text", "ML16", "mapInPandas"),
 )
 def extractive_summary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ML16 (summarizer) as Arrow-batched mapInPandas: model loaded
-    once per executor (lazy global; HF pipeline behind an import guard
-    with a deterministic extractive fallback), applied per column
-    batch. Reference runs distilbart per row on the driver
-    (src/ml/summarizer.py:19-33); here summarization rides the
+    """ML16 (summarizer) as Arrow-batched mapInPandas: the
+    deterministic extractive summarizer (operators/summarize.py)
+    applied per column batch. Reference runs distilbart per row on the
+    driver (src/ml/summarizer.py:19-33); here summarization rides the
     executors and scales with partitions."""
     from ..operators.summarize import summarize
 
@@ -4711,7 +4710,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced (diversity-preserving) embedding sampling: the
     corpus is partitioned into the shared adaptive IVF cells
     (operators/similarity_search.ivf_assign — c = isqrt(n) codebook,
-    bit-identical Arrow/BNLJ argmax) and each cell keeps at most
+    Arrow packed-long argmax) and each cell keeps at most
     ceil(n / 4c) vectors (lowest vec_id first, deterministic), so the
     ~25% sample preserves every embedding-space REGION instead of
     echoing the densest clusters — the cluster-aware pruning step of
@@ -4721,22 +4720,22 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the parquet FOOTER row count sizes c and the cap
     (zero Spark jobs — the same table_num_rows gate its siblings
     use; round-9 verdict item); the assignment is the measured
-    ivf_assign kernel (one Arrow pass at scale, JVM BNLJ below 8k
-    vectors); the rank is a window over (cell) — narrow rows, cells
-    are isqrt-sized so no partition is ever more than ~sqrt(n) rows,
-    and the cap bound means skew cannot concentrate output."""
+    ivf_assign kernel (one Arrow pass); the rank is a window over
+    (cell) — narrow rows, cells are isqrt-sized so no partition is
+    ever more than ~sqrt(n) rows, and the cap bound means skew cannot
+    concentrate output."""
     from ..operators.similarity_search import adaptive_codebook, ivf_assign
     from ..sources.bronze import table_num_rows
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_num_rows(sf_dir, "embeddings")
-    # Codebook size and assignment impl from the ONE shared gate
-    # (adaptive_codebook) so this caller cannot drift from ivf_assign's
-    # own adaptive branch; the oracle states the c formula
-    # independently in SQL, which keeps checking both.
-    c, impl = adaptive_codebook(n)
+    # Codebook size from the ONE shared formula (adaptive_codebook) so
+    # this caller cannot drift from ivf_assign's own adaptive branch;
+    # the oracle states the c formula independently in SQL, which
+    # keeps checking both.
+    c, _ = adaptive_codebook(n)
     cap = max(1, -(-n // (4 * c)))
-    _, cents, assigned = ivf_assign(emb, n_centroids=c, impl=impl, n_rows=n)
+    _, cents, assigned = ivf_assign(emb, n_centroids=c, n_rows=n)
     lut = cents.select("cent_ix", F.col("cent_id").alias("cell"))
     cells = assigned.select("vec_id", F.col("cell").alias("cent_ix")).join(
         F.broadcast(lut), "cent_ix"
@@ -4819,7 +4818,7 @@ def prototypicality_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample per REGION; this ranks by INFORMATIVENESS within a region.
 
     Scale shape: the assignment is the measured ivf_assign kernel
-    (one Arrow pass ≥8k vectors); the winner's similarity is ONE
+    (one Arrow pass); the winner's similarity is ONE
     positional scalar-column dot against the broadcast codebook; the
     rank is a window over (cell) — narrow rows, isqrt-sized
     partitions, same class as cluster_balanced_sample."""
@@ -4831,7 +4830,7 @@ def prototypicality_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_num_rows(sf_dir, "embeddings")
-    c, impl = adaptive_codebook(n)
+    c, _ = adaptive_codebook(n)
     # Winner similarity CARRIED through the argmax (with_sim): the
     # packed key already holds round(sim·1e9), so the kernel unpacks
     # it instead of a downstream broadcast-join + 64-term dot
@@ -4841,8 +4840,7 @@ def prototypicality_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (SCALE.md). with_vectors=False keeps the scored frame narrow:
     # this query never needs the 64 scalar columns after assignment.
     base, cents, assigned = ivf_assign(
-        emb, n_centroids=c, impl=impl, n_rows=n,
-        with_vectors=False, with_sim=True,
+        emb, n_centroids=c, n_rows=n, with_vectors=False, with_sim=True
     )
     scored = assigned.join(
         F.broadcast(cents.select("cent_ix", "cent_id")),
@@ -4959,7 +4957,7 @@ def d4_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_num_rows(sf_dir, "embeddings")
-    c, assign_impl = adaptive_codebook(n)
+    c, _ = adaptive_codebook(n)
     # ONE shared assignment feeds both stages (preassigned), and the
     # winner similarity rides the packed argmax key out (with_sim) —
     # the former broadcast-join + 64-term dot recompute measured
@@ -4968,9 +4966,7 @@ def d4_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # impl="auto" + n_rows hands semantic_dedup_frame the SAME 50k
     # arrow/join crossover the operator owns — no inline restatement
     # of its constant, no count job (round-9 advisor finding).
-    trio = ivf_assign(
-        emb, n_centroids=c, impl=assign_impl, n_rows=n, with_sim=True
-    )
+    trio = ivf_assign(emb, n_centroids=c, n_rows=n, with_sim=True)
     base, cents, assigned = trio
     sem = semantic_dedup_frame(
         emb,

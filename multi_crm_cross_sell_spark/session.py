@@ -59,46 +59,52 @@ def _ship_package(spark: SparkSession) -> None:
     reference, so a worker spawned by a driver that imported us via a
     sys.path hack from another cwd raises ModuleNotFoundError at the
     first UDF batch. addPyFile of a package zip fixes that for every
-    session shape. Idempotent per JVM (addPyFile dedups by filename);
-    failures are non-fatal because the common layouts (cwd=repo, or
-    PYTHONPATH set) never needed it."""
-    try:
-        import os
-        import shutil
-        import tempfile
+    session shape. Idempotent per JVM (the zip's name is a digest of
+    its contents, and addPyFile dedups by name)."""
+    import tempfile
 
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        stamp = os.path.join(
-            tempfile.gettempdir(), "multi_crm_cross_sell_spark_pkg"
-        )
-        # Rebuild when any package source is newer than the cached
-        # zip (round 14): a zip cached by an EARLIER session otherwise
-        # ships stale UDF code to the Python workers — cloudpickle
-        # serializes pandas-UDF closures by reference, so the worker
-        # resolves module attributes against the zip's old copy and
-        # dies with AttributeError (or, worse, silently runs old
-        # logic) after any edit to a UDF-referenced module.
-        src_mtime = 0.0
-        pkg_dir = os.path.join(root, "multi_crm_cross_sell_spark")
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    src_mtime = max(
-                        src_mtime, os.path.getmtime(os.path.join(dirpath, fn))
-                    )
-        if (
-            not os.path.exists(stamp + ".zip")
-            or os.path.getmtime(stamp + ".zip") <= src_mtime
-        ):
-            shutil.make_archive(
-                stamp,
-                "zip",
-                root_dir=root,
-                base_dir="multi_crm_cross_sell_spark",
-            )
-        spark.sparkContext.addPyFile(stamp + ".zip")
-    except Exception:
-        pass
+    spark.sparkContext.addPyFile(_package_zip(tempfile.gettempdir()))
+
+
+def _package_zip(out_dir: str) -> str:
+    """Path of a zip of this package's ``.py`` sources in ``out_dir``,
+    built if absent. The file name carries a digest of the sources and
+    the archive is deterministic (sorted entries, fixed timestamps), so
+    identical sources give byte-identical zips and different sources
+    (an edited module, another checkout) never share a name. Spark
+    refuses a second, different file under a name it has already
+    shipped, and a stale zip would hand Python workers old UDF code."""
+    import hashlib
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root, pkg = os.path.split(pkg_dir)
+    sources = sorted(
+        os.path.relpath(os.path.join(dirpath, fn), root)
+        for dirpath, _dirnames, filenames in os.walk(pkg_dir)
+        for fn in filenames
+        if fn.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    contents = []
+    for rel in sources:
+        with open(os.path.join(root, rel), "rb") as f:
+            data = f.read()
+        contents.append((rel, data))
+        digest.update(rel.encode() + b"\0" + data + b"\0")
+    path = os.path.join(out_dir, f"{pkg}_pkg_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(path):
+        # Written under a private name and renamed into place, so a
+        # concurrent session never reads a half-written zip.
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for rel, data in contents:
+                info = zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0))
+                info.compress_type = zipfile.ZIP_DEFLATED
+                info.external_attr = 0o644 << 16
+                z.writestr(info, data)
+        os.replace(tmp, path)
+    return path
 
 
 def get_spark(

@@ -175,35 +175,32 @@ def test_interleaved_measure_no_con_no_oracle_timing():
     assert s is not None and d is None and err is None
 
 
-def test_ship_package_rebuilds_stale_zip(spark, tmp_path, monkeypatch):
-    """Round 14: the worker package zip is rebuilt when any package
-    source is NEWER than the cached zip. A zip cached by an earlier
-    session otherwise ships stale UDF code to Python workers
-    (cloudpickle serializes pandas-UDF closures by reference — the
-    worker resolves module attributes against the zip's old copy and
-    dies with AttributeError after any UDF-module edit)."""
+def test_package_zip_is_content_addressed(tmp_path):
+    """The worker package zip is named by a digest of the package
+    sources and written deterministically: two builds into two
+    directories give the same name and the same bytes, so a zip from
+    another checkout can never shadow this one under a shared name
+    (Spark rejects a second, different file under an already-shipped
+    name), and the archive carries the current sources."""
     import os
-    import tempfile
     import zipfile
 
     from multi_crm_cross_sell_spark import session as sess
 
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    stamp = os.path.join(str(tmp_path), "multi_crm_cross_sell_spark_pkg")
-
-    sess._ship_package(spark)
-    assert os.path.exists(stamp + ".zip")
-
-    # Make the cached zip look older than the sources: next call must
-    # rebuild (mtime strictly advances past the planted stale value).
-    os.utime(stamp + ".zip", (1.0, 1.0))
-    sess._ship_package(spark)
-    assert os.path.getmtime(stamp + ".zip") > 1.0
-    with zipfile.ZipFile(stamp + ".zip") as z:
+    (tmp_path / "a").mkdir()
+    (tmp_path / "b").mkdir()
+    a = sess._package_zip(str(tmp_path / "a"))
+    b = sess._package_zip(str(tmp_path / "b"))
+    assert os.path.basename(a) == os.path.basename(b)
+    with open(a, "rb") as fa, open(b, "rb") as fb:
+        assert fa.read() == fb.read()
+    # A rebuild over an existing zip reuses it.
+    assert sess._package_zip(str(tmp_path / "a")) == a
+    with zipfile.ZipFile(a) as z:
         src = z.read(
             "multi_crm_cross_sell_spark/functions/similarity.py"
         ).decode()
-    assert "_jw_floor_batch" in src  # current source, not a stale copy
+    assert "_jw_floor_batch" in src
 
 
 def test_compact_final_line_fits_budget_and_carries_per_query():

@@ -594,10 +594,9 @@ class TestMultiTableBucketKernel:
         ADVICE: it arrives as NaN at the Arrow boundary — null/NaN
         collapse for float lists — and the dense path now maps it to
         0.0, restoring the pre-round-14 deep path's semantics).
-        Ragged arrays are NOT spec-comparable: the JVM form's
-        embedding[i] THROWS under ANSI for short arrays, so the
-        kernel's zero-padding is its loud-free extension (same as
-        bucket_wide_arrow)."""
+        A SHORT (ragged) vector is zero-padded to ``dim``; the JVM
+        form's embedding[i] throws under ANSI for short arrays, so its
+        spec is the explicitly padded row."""
         from multi_crm_cross_sell_spark.operators.similarity_search import (
             DIM,
             bucket_frame,
@@ -605,21 +604,28 @@ class TestMultiTableBucketKernel:
             wide_base,
         )
 
-        rows = []
-        for vid in range(6):
+        rows, spec_rows = [], []
+        for vid in range(7):
             vec = [((vid * 31 + i * 7) % 13 - 6) / 7.0 for i in range(DIM)]
             if vid == 3:
                 vec = None  # whole-vector null -> all-zero row
             if vid == 4:
                 vec[5] = None  # null ELEMENT -> COALESCE 0.0 (ADVICE)
+            if vid == 6:
+                rows.append((vid, vec[: DIM // 2]))  # short -> zero-padded
+                spec_rows.append((vid, vec[: DIM // 2] + [0.0] * (DIM // 2)))
+                continue
             rows.append((vid, vec))
-        e = spark.createDataFrame(
-            rows, "vec_id bigint, embedding array<double>"
-        )
+            spec_rows.append((vid, vec))
+        schema = "vec_id bigint, embedding array<double>"
+        e = spark.createDataFrame(rows, schema)
         spec = {
             (r.vec_id, r.t): r.bucket
             for r in bucket_frame(
-                wide_base(e), n_planes=8, n_tables=2, dim=DIM
+                wide_base(spark.createDataFrame(spec_rows, schema)),
+                n_planes=8,
+                n_tables=2,
+                dim=DIM,
             ).collect()
         }
         got = {}

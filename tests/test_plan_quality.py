@@ -233,30 +233,67 @@ def test_wide_base_has_no_wide_alias(spark):
     assert cols == ["vec_id"] + [f"v_{i}" for i in range(DIM)]
 
 
-def test_ivf_assign_arrow_matches_bnlj(spark):
-    """The Arrow-batched numpy assignment must be BIT-IDENTICAL to the
-    JVM packed-long BNLJ argmax: same left-to-right accumulation order
-    per dot/norm, same exact-HALF_UP nano rounding (numpy's banker's
-    round and the naive floor(|x|+0.5) both misround near .5
-    boundaries), same packed tie-break. A single differing cell means
-    one of those invariants broke."""
+def _oracle_assignment():
+    """(vec_id, cell, proto_sim) from DuckDB: the ann_ivf_topk oracle's
+    own CTEs up to its per-centroid ``sims`` (lowest-id codebook,
+    ROUND(cos, 9)), then the ``assigned`` winner rule — argmax of the
+    rounded similarity, ties to the lowest cent_id — with the winning
+    similarity kept. An engine-independent spec for the assignment
+    kernel: a single differing row means its accumulation order, its
+    HALF_UP nano rounding or its packed tie-break broke."""
+    from check import duck_connect
+
+    from multi_crm_cross_sell_spark.plans.datapipe import _ivf_oracle
+
+    sql = _ivf_oracle()
+    head = sql[: sql.index("ranked AS (")].rstrip().rstrip(",")
+    con = duck_connect(SF)
+    try:
+        return con.execute(
+            head
+            + """
+SELECT vec_id, cent_id AS cell, cent_sim AS proto_sim FROM (
+  SELECT vec_id, cent_id, cent_sim,
+         ROW_NUMBER() OVER (PARTITION BY vec_id
+                            ORDER BY cent_sim DESC, cent_id) AS rn
+  FROM sims
+) WHERE rn = 1 ORDER BY vec_id
+"""
+        ).fetchdf()
+    finally:
+        con.close()
+
+
+def _by_cent_id(assigned, cents):
+    """The kernel's (vec_id, cell = cent_ix, proto_sim) with each cell
+    mapped to its centroid's vec_id, as the oracle names cells."""
+    from pyspark.sql import functions as F
+
+    lut = cents.select("cent_ix", F.col("cent_id").alias("cell_id"))
+    return (
+        assigned.join(F.broadcast(lut), assigned.cell == lut.cent_ix)
+        .select("vec_id", F.col("cell_id").alias("cell"), "proto_sim")
+        .toPandas()
+        .sort_values("vec_id")
+        .reset_index(drop=True)
+    )
+
+
+def test_ivf_assign_matches_oracle_assignment(spark):
+    """The Arrow assignment kernel's winner and winning similarity
+    equal the DuckDB spec exactly, row for row."""
     from multi_crm_cross_sell_spark.operators.similarity_search import (
         ivf_assign,
     )
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    _, _, a = ivf_assign(e, None, impl="arrow")
-    _, _, b = ivf_assign(e, None, impl="bnlj")
-    mism = (
-        a.select("vec_id", "cell")
-        .join(
-            b.select("vec_id", b.cell.alias("cell_b")),
-            "vec_id",
-        )
-        .where("cell != cell_b")
-        .count()
-    )
-    assert mism == 0
+    _, cents, a = ivf_assign(e, None, with_vectors=False, with_sim=True)
+    got = _by_cent_id(a, cents)
+    want = _oracle_assignment()
+    assert len(got) == len(want) > 0
+    assert (got["vec_id"].values == want["vec_id"].values).all()
+    assert (got["cell"].values == want["cell"].values).all()
+    assert (got["proto_sim"].values == want["proto_sim"].values).all()
 
 
 def test_ivf_assign_arrow_chunking_is_winner_invariant(spark):
@@ -267,11 +304,10 @@ def test_ivf_assign_arrow_chunking_is_winner_invariant(spark):
     from multi_crm_cross_sell_spark.operators.similarity_search import (
         _assign_cells_arrow,
         ivf_assign,
-        wide_base,
     )
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    base, cents, _ = ivf_assign(e, None, impl="bnlj")
+    base, cents, _ = ivf_assign(e, None)
     chunked = _assign_cells_arrow(base, cents, 64, cblock=7)
     whole = _assign_cells_arrow(base, cents, 64)
     mism = (
@@ -286,10 +322,9 @@ def test_ivf_assign_arrow_chunking_is_winner_invariant(spark):
 
 def test_ivf_assign_with_sim_parity(spark):
     """with_sim carries the winner cosine OUT of the packed argmax key
-    (nanos/1e9) instead of recomputing the dot. Three invariants:
-    (1) arrow and bnlj with_sim agree bit-for-bit on (cell, proto_sim);
-    (2) with_sim changes no cell assignment vs the default path;
-    (3) the unpacked sim equals the recomputed ROUND(dot/(|v||c|), 9)
+    (nanos/1e9) instead of recomputing the dot. Two invariants:
+    (1) with_sim changes no cell assignment vs the default path;
+    (2) the unpacked sim equals the recomputed ROUND(dot/(|v||c|), 9)
         against the assigned centroid — the claim that nanos/1e9 IS
         the correctly-rounded ROUND(sim, 9)."""
     from multi_crm_cross_sell_spark.operators.similarity_search import (
@@ -301,18 +336,16 @@ def test_ivf_assign_with_sim_parity(spark):
     from pyspark.sql import functions as F
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    _, _, a = ivf_assign(e, None, impl="arrow", with_vectors=False, with_sim=True)
-    _, cents, b = ivf_assign(e, None, impl="bnlj", with_vectors=False, with_sim=True)
+    _, _, a = ivf_assign(e, None, with_vectors=False, with_sim=True)
     pa = a.toPandas().sort_values("vec_id").reset_index(drop=True)
-    pb = b.toPandas().sort_values("vec_id").reset_index(drop=True)
     assert list(pa.columns) == ["vec_id", "cell", "proto_sim"]
-    assert pa.equals(pb)
-    _, _, plain = ivf_assign(e, None, impl="bnlj", with_vectors=False)
+    _, _, plain = ivf_assign(e, None, with_vectors=False)
     pc = plain.toPandas().sort_values("vec_id").reset_index(drop=True)
+    assert (pa["vec_id"].values == pc["vec_id"].values).all()
     assert (pa["cell"].values == pc["cell"].values).all()
-    # (3): recompute the dot against the assigned centroid, the way the
+    # (2): recompute the dot against the assigned centroid, the way the
     # pre-round-10 consumers did, and demand exact equality.
-    _, _, wide = ivf_assign(e, None, impl="bnlj", with_sim=True)
+    _, cents, wide = ivf_assign(e, None, with_sim=True)
     sim = F.expr(
         f"ROUND({dot_cols('v', 'c', DIM)}"
         f" / ({norm_cols('v', DIM)} * {norm_cols('c', DIM)}), 9)"
@@ -324,6 +357,18 @@ def test_ivf_assign_with_sim_parity(spark):
         .count()
     )
     assert mism == 0
+
+
+def test_ann_ivf_codebook_is_a_local_relation(spark):
+    """ivf_assign hands the probe side its codebook as a LocalRelation
+    built from the rows the assignment kernel already collected, so
+    the executed plan reads it with a LocalTableScan and never
+    re-derives it from the corpus with a TakeOrderedAndProject."""
+    df = all_queries()["ann_ivf_topk"].fn(spark, SF)
+    df.write.mode("overwrite").format("noop").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "TakeOrderedAndProject" not in plan, plan
 
 
 def test_adaptive_coarse_formula():

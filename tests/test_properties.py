@@ -306,7 +306,7 @@ class TestClusterBalancedSampleBatchProperty:
         emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
         c = max(16, math.isqrt(n))
         cap = max(1, -(-n // (4 * c)))
-        _, cents, assigned = ivf_assign(emb, n_centroids=c, impl="bnlj")
+        _, cents, assigned = ivf_assign(emb, n_centroids=c)
         lut = cents.select("cent_ix", F.col("cent_id").alias("cell"))
         cells = assigned.select(
             "vec_id", F.col("cell").alias("cent_ix")
