@@ -1,10 +1,13 @@
-"""Feature-engineering column expressions (SURVEY §2.7, F7-F19).
+"""Feature-engineering column expressions (SURVEY §2.7 F7, F9, F11)
+and the ensemble vote (A12, A13).
 
 The reference computes these per-row in pandas inside
-``create_account_features`` / ``create_cross_org_features``
-(/root/reference/src/ml/pipeline.py:65-157); here each is a native
-column expression that stays inside whole-stage codegen — no Python in
-the hot path, so they cost the same at 100 TB as any other projection.
+``create_account_features`` (reference ``src/ml/pipeline.py:65-106``);
+here each is a native column expression that stays inside whole-stage
+codegen — no Python in the hot path, so they cost the same at 100 TB as
+any other projection. The pair features, score ladders and actions
+(F11-F19) are part of ``cross_sell_recommendations``' SQL
+(plans/crm.py).
 
 Null-sentinel semantics are load-bearing for score parity with the
 reference (fillna(0)/replace(0,1)/fillna(365): pipeline.py:70-86) and
@@ -27,13 +30,6 @@ def log1p_guarded(col: Column) -> Column:
     return F.log1p(F.greatest(F.coalesce(col, F.lit(0.0)), F.lit(0.0)))
 
 
-def ratio_guarded(num: Column, den: Column) -> Column:
-    """num/den with the reference's 0→1 divisor sentinel
-    (pipeline.py:71-73: ``employees.replace(0, 1)``)."""
-    d = F.coalesce(den, F.lit(0.0))
-    return F.coalesce(num, F.lit(0.0)) / F.when(d == 0, F.lit(1.0)).otherwise(d)
-
-
 def is_enterprise(col: Column, threshold: float = 1000.0) -> Column:
     """(value > threshold) → int flag (pipeline.py:77)."""
     return (F.coalesce(col, F.lit(0.0)) > threshold).cast("int")
@@ -43,70 +39,6 @@ def recency_score(days: Column) -> Column:
     """1/(1+days/30), days nulls → 365 (pipeline.py:86-89)."""
     d = F.coalesce(days.cast("double"), F.lit(365.0))
     return F.lit(1.0) / (F.lit(1.0) + d / F.lit(30.0))
-
-
-def pair_activity_score(days1: Column, days2: Column) -> Column:
-    """2/(1+d1/30+d2/30) (pipeline.py:154)."""
-    d1 = F.coalesce(days1.cast("double"), F.lit(365.0))
-    d2 = F.coalesce(days2.cast("double"), F.lit(365.0))
-    return F.lit(2.0) / (F.lit(1.0) + d1 / 30.0 + d2 / 30.0)
-
-
-def size_ratio(a: Column, b: Column) -> Column:
-    """min/max size compatibility with a 1.0 floor on each side
-    (entity_resolution.py:343-348; unknown → neutral)."""
-    aa = F.greatest(F.coalesce(a, F.lit(1.0)), F.lit(1.0))
-    bb = F.greatest(F.coalesce(b, F.lit(1.0)), F.lit(1.0))
-    return F.least(aa, bb) / F.greatest(aa, bb)
-
-
-def size_compatibility(a: Column, b: Column) -> Column:
-    """1/(1+|ln(a/b)|) (pipeline.py:118-119)."""
-    aa = F.greatest(F.coalesce(a, F.lit(1.0)), F.lit(1.0))
-    bb = F.greatest(F.coalesce(b, F.lit(1.0)), F.lit(1.0))
-    return F.lit(1.0) / (F.lit(1.0) + F.abs(F.log(aa / bb)))
-
-
-def same_category(a: Column, b: Column, floor: float = 0.0) -> Column:
-    """Equality indicator with an optional partial-credit floor
-    (pipeline.py:115-123: same industry 1.0; geo floor 0.3)."""
-    return (
-        F.when(a.isNull() | b.isNull(), F.lit(floor))
-        .when(a == b, F.lit(1.0))
-        .otherwise(F.lit(floor))
-    )
-
-
-def confidence_ladder(score: Column) -> Column:
-    """Score → {Very High, High, Medium, Low}
-    (api/main.py:609-617 simple-score variant)."""
-    return (
-        F.when(score >= 0.8, "Very High")
-        .when(score >= 0.6, "High")
-        .when(score >= 0.4, "Medium")
-        .otherwise("Low")
-    )
-
-
-def recommendation_type(same_segment: Column, cross_region: Column) -> Column:
-    """Rule ladder mirroring pipeline.py:391-398 (same industry →
-    expansion; partner → referral; else market development), re-keyed
-    to the testdata's segment/region vocabulary."""
-    return (
-        F.when(same_segment >= 1.0, "Segment Expansion")
-        .when(cross_region >= 1.0, "Market Development")
-        .otherwise("Partner Referral")
-    )
-
-
-def next_best_action(score: Column) -> Column:
-    """4-step action ladder by score (pipeline.py:406-415)."""
-    return (
-        F.when(score >= 0.8, "Schedule joint executive briefing")
-        .when(score >= 0.6, "Arrange partner introduction call")
-        .when(score >= 0.4, "Share co-marketing materials")
-        .otherwise("Add to nurture campaign")
-    )
 
 
 def ensemble_score(

@@ -257,28 +257,10 @@ def jaro_winkler(a: Column, b: Column) -> Column:
     return jaro_winkler_udf(a, b)
 
 
-# Non-deterministic INSTANCE of the floor UDF (the function itself is
-# pure — this is an optimizer fence, guide §4.4): when a filter
-# references the UDF's output column, the optimizer pushes the filter
-# down and DUPLICATES the evaluation — jaro_winkler_pairs' executed
-# plan carried TWO ArrowEvalPython nodes, every candidate pair paying
-# the UDF twice (round-14 plan read, plans/r14/jaro_winkler_pairs_
-# before.txt). Marking it non-deterministic forbids the copy: one
-# ArrowEvalPython, filter above it. Round-15 ADVICE fix: the fence
-# lives in the FENCED wrapper below and only the filter-referencing
-# call site (jaro_winkler_pairs) uses it — Spark rejects
-# non-deterministic expressions in join conditions and
-# grouping/aggregate expressions, so the plain `jaro_winkler_textbook`
-# export stays deterministic for any future caller embedding it in a
-# join ON clause, and legitimate filter pushes stay available to
-# consumers that do not filter on the UDF's own output.
+# The floor UDF is pure; this non-deterministic instance is an
+# optimizer fence, so a filter on its output cannot be pushed below a
+# second copy of the Arrow eval.
 _jaro_winkler_floor_nd = jaro_winkler_floor_udf.asNondeterministic()
-
-
-def jaro_winkler_textbook(a: Column, b: Column) -> Column:
-    """Deterministic floor-convention UDF column — safe in join
-    conditions and aggregates, and eligible for filter pushdown."""
-    return jaro_winkler_floor_udf(a, b)
 
 
 def jaro_winkler_textbook_fenced(a: Column, b: Column) -> Column:

@@ -39,9 +39,6 @@ from pyspark.sql import functions as F
 
 from ..functions.features import ensemble_score, score_confidence
 
-# Reference ensemble weights (pipeline.py:48-54).
-WEIGHTS = {"nn": 0.3, "xgb": 0.3, "rf": 0.2, "gb": 0.2}
-
 # Reference pair-feature names (pipeline.py:108-157): 6-dim vector.
 PAIR_FEATURES = [
     "industry_match",

@@ -32,6 +32,9 @@ BAND_ROWS = 4
 A = [1_000_003 + 7_919 * k for k in range(N_HASHES)]
 B = [12_345 + 104_729 * k for k in range(N_HASHES)]
 SHINGLE = 3
+# Positional combiner for word-hash n-grams (Horner, mod P each step:
+# operands stay < 2^51, no bigint overflow).
+GRAM_K = 1_000_003
 
 
 def base_hash(col: Column) -> Column:
@@ -39,16 +42,11 @@ def base_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint") % P
 
 
-# ---------------------------------------------------------------------------
-# SQL-STRING constructors (round 12). Expression-identical to the
-# Column builders below, but assembled as Spark-SQL text: one py4j
-# round trip per selectExpr instead of one per operator. The Column
-# forms cost ~0.8s of pure driver time PER QUERY CONSTRUCTION at 16
-# minhash lambdas + 8 band keys (measured on source_overlap_matrix /
-# incremental_neardup_ingest, whose walls were ~100% construction).
-# Parity: these produce the same analyzed expressions as the Column
-# forms — same lambdas, same literals, same % and conv semantics.
-# ---------------------------------------------------------------------------
+# Spark-SQL text builders for the MinHash pipeline. They are assembled
+# as strings because one selectExpr is one py4j round trip, where the
+# same expressions built operator by operator as Columns cost about
+# 0.8 s of driver time per query construction (16 minhash lambdas and
+# 8 band keys).
 
 
 def base_hash_sql(x: str) -> str:
@@ -56,13 +54,22 @@ def base_hash_sql(x: str) -> str:
 
 
 def word_hashes_sql(text: str) -> str:
-    """``transform(split(text, ' '), x -> base_hash(x))`` as SQL."""
+    """Per-position word hash array: one md5 per word of the document,
+    ``transform(split(text, ' '), x -> base_hash(x))``."""
     return f"transform(split({text}, ' '), x -> {base_hash_sql('x')})"
 
 
 def gram_hashes_sql(wh: str, n: int = SHINGLE) -> str:
-    """Horner n-gram combine over a bound word-hash array, as SQL —
-    transliteration of :func:`gram_hashes_from_words`."""
+    """Distinct word n-gram hashes derived arithmetically from a bound
+    word-hash array: gram_i is the Horner combine of n consecutive word
+    hashes mod P. The n-gram strings are never built and md5 runs once
+    per word instead of once per (longer) gram; the gram set equals
+    string shingling up to ~60-bit hash collisions, which near-dup
+    Jaccard tolerates. Docs shorter than n words give an empty array.
+
+    ``wh`` must name a bound column (its own projection), not an
+    inline transform: the lambda references it n times per element and
+    higher-order functions get no cross-expression CSE."""
     acc = f"element_at({wh}, i)"
     for j in range(1, n):
         acc = f"({acc} * {GRAM_K} + element_at({wh}, i + {j})) % {P}"
@@ -75,7 +82,8 @@ def gram_hashes_sql(wh: str, n: int = SHINGLE) -> str:
 
 def minhash_sig_sql(h: str) -> list[str]:
     """``array_min(transform(h, x -> (A_k*x + B_k) % P)) AS mh_k`` for
-    each of the N_HASHES permutations, as SQL."""
+    each of the N_HASHES permutations, over a bound hash array ``h``
+    (pure bigint math; the md5 work is not repeated per permutation)."""
     return [
         f"array_min(transform({h}, x -> ({A[k]} * x + {B[k]}) % {P})) AS mh{k}"
         for k in range(N_HASHES)
@@ -83,6 +91,7 @@ def minhash_sig_sql(h: str) -> list[str]:
 
 
 def band_keys_sql(prefix: str = "mh") -> list[str]:
+    """Signature rows concatenated into BAND_ROWS-sized band keys."""
     n_bands = N_HASHES // BAND_ROWS
     return [
         "concat_ws('_', "
@@ -90,95 +99,6 @@ def band_keys_sql(prefix: str = "mh") -> list[str]:
         + f") AS band{b}"
         for b in range(n_bands)
     ]
-
-
-def shingles(text: Column, n: int = SHINGLE) -> Column:
-    """Distinct word n-gram shingles of a text column (array<string>).
-
-    Built as slice+array_join per gram rather than n element_at calls:
-    higher-order-function lambdas are interpreted (no codegen), so one
-    slice beats n indexed lookups ~2.5× on the hot path. Docs shorter
-    than n tokens yield an empty array (sequence() would otherwise
-    count DOWN and index out of range)."""
-    t = F.split(text, " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(t) - n),
-        lambda i: F.array_join(F.slice(t, i + 1, n), " "),
-    )
-    return F.when(F.size(t) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _perm(k: int):
-    # closure factory: a default-arg lambda would change the lambda's
-    # arity and make transform() pass the element index into it
-    return lambda x: (F.lit(A[k]) * x + F.lit(B[k])) % P
-
-
-# Positional combiner for word-hash n-grams (Horner, mod P each step:
-# operands stay < 2^51, no bigint overflow).
-GRAM_K = 1_000_003
-
-
-def word_hashes(text: Column) -> Column:
-    """Per-position word hash array: one md5 per WORD of the document."""
-    return F.transform(F.split(text, " "), base_hash)
-
-
-def gram_hashes_from_words(wh: Column, n: int = SHINGLE) -> Column:
-    """Distinct word n-gram hashes derived ARITHMETICALLY from a bound
-    word-hash array: gram_i = Horner-combine of n consecutive word
-    hashes mod P. The n-gram strings are never materialized and md5
-    runs once per word instead of once per (longer) gram — the gram
-    set is equivalent to string shingling up to ~60-bit hash
-    collisions, which near-dup Jaccard tolerates by construction.
-
-    ``wh`` MUST be a bound column (own projection), not an inline
-    transform: the lambda below references it n times per element and
-    HOFs get no cross-expression CSE."""
-    def gram(i):
-        acc = F.element_at(wh, i)
-        for j in range(1, n):
-            acc = (acc * GRAM_K + F.element_at(wh, i + j)) % P
-        return acc
-
-    grams = F.transform(F.sequence(F.lit(1), F.size(wh) - (n - 1)), gram)
-    return F.when(F.size(wh) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-
-
-def minhash_signature(sh: Column) -> list[Column]:
-    """N_HASHES minhash values over a shingle array column.
-
-    NOTE: each returned expression embeds its own copy of the md5
-    base-hash traversal — higher-order functions are interpreted with
-    no cross-expression CSE, so the md5s run N_HASHES times per row.
-    Hot paths must materialize ``transform(sh, base_hash)`` in its own
-    projection and use minhash_signature_from_hashes (measured ~4× on
-    the near-dup bench)."""
-    h = F.transform(sh, base_hash)
-    return minhash_signature_from_hashes(h)
-
-
-def minhash_signature_from_hashes(h: Column) -> list[Column]:
-    """N_HASHES minhash values over a PRE-COMPUTED base-hash array —
-    each pass is pure integer math over bigints, the expensive md5 work
-    having been bound once by the caller's projection."""
-    return [
-        F.array_min(F.transform(h, _perm(k))).alias(f"mh{k}") for k in range(N_HASHES)
-    ]
-
-
-def band_keys(prefix: str = "mh") -> list[Column]:
-    """Concatenate signature rows into BAND_ROWS-sized band keys."""
-    n_bands = N_HASHES // BAND_ROWS
-    out = []
-    for b in range(n_bands):
-        cols = [F.col(f"{prefix}{b * BAND_ROWS + r}") for r in range(BAND_ROWS)]
-        out.append(F.concat_ws("_", *cols).alias(f"band{b}"))
-    return out
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -268,10 +188,6 @@ def near_dup_pairs(
     # md5+gram expression into the Filter node — re-evaluating the
     # word-hash transform inside every element_at, O(words²) md5 per
     # document (measured 20×).
-    # SQL-string projections (round 12): expression-identical to the
-    # Column builders, ~300 fewer py4j round trips per construction
-    # (this pipeline is built by four registered queries; its Column
-    # form alone cost ~0.8s of driver time per construction).
     gate = docs.where(F.size(F.split(F.col(text_col), " ")) >= SHINGLE)
     base = (
         gate.repartition(n_parts, F.col(id_col))
@@ -320,8 +236,12 @@ def near_dup_pairs(
         # Verify ONLY candidate documents: the candidate-id set
         # semi-joins the scan BELOW the md5/gram pipeline, so the
         # verify-side heavy work is candidate-sized, not corpus-sized
-        # — and no corpus gram table is ever built or broadcast.
-        cand = cand.localCheckpoint(eager=False)
+        # — and no corpus gram table is ever built or broadcast. The
+        # candidates materialize eagerly, in their own job: behind a
+        # lazy checkpoint, a plan without adaptive execution runs the
+        # whole signature and band-join pipeline inside the broadcast
+        # build of ``ids``, which spark.sql.broadcastTimeout caps.
+        cand = cand.localCheckpoint(eager=True)
         ids = (
             cand.selectExpr("doc1 AS cid")
             .union(cand.selectExpr("doc2 AS cid"))
@@ -936,19 +856,6 @@ def banded_simhash_bands(
         "nb",
         f"posexplode(array({karr})) AS (band, key)",
     )
-
-
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash over word tokens: per-bit weighted vote of token
-    hashes. Small enough to stay a pure column expression; 64-bit
-    variant is the same construction over more bits.
-
-    NOTE: the token-hash array is referenced 16 times (one aggregate
-    per bit); callers on a hot path should materialize it in its own
-    projection and use simhash16_from_hashes so the md5s are computed
-    once per row, not once per bit."""
-    toks = F.array_distinct(F.split(text, " "))
-    return simhash16_from_hashes(F.transform(toks, base_hash))
 
 
 def simhash16_from_hashes(h: Column) -> Column:

@@ -16,19 +16,10 @@ matter how large the base tables grow.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.features import (
-    confidence_ladder,
-    is_enterprise,
-    log1p_guarded,
-    next_best_action,
-    pair_activity_score,
-    recency_score,
-    size_compatibility,
-    size_ratio,
-)
+from ..functions.features import is_enterprise, log1p_guarded, recency_score
 from ..functions.hashing import ab_variant, deterministic_pair_id
 from ..functions.similarity import (
     jaccard_tokens,
@@ -204,27 +195,18 @@ def cross_sell_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of base-table size, and Spark broadcast-NL-joins the
     tiny capped sides.
 
-    CONSTRUCTION COST (round 12): the plan is declared as TWO
-    parameterized spark.sql statements instead of a ~300-call Column
-    tree. A job-level decomposition found the sf0.1 wall was NOT
-    execution: 1.27s min wall = 0.58s in-job (8 sub-0.3s jobs, the
-    scale-true capped-pair plan) + ~0.7s of pure DRIVER work, of
-    which plan CONSTRUCTION alone re-measured at 1.14s warm (py4j
-    round trips per Column operator — the round-7 banded-simhash
-    lesson at query scale). SQL-string construction is a handful of
-    round trips for the same logical plan; every expression below is
-    a literal transliteration of the previous Column tree (D-suffixed
-    double literals keep the arithmetic bit-identical; same aliases,
-    same CASE ladders). The fixed-point spend sum goes through
-    spark_sql_dsum (round 13): the initial SQL rewrite inlined an
-    unguarded FLOOR/SUM, silently dropping the dsum overflow + NaN
-    traps — the guarded fragment restores the loud-on-both-surfaces
-    contract of plans/_parity.py with the same floor(x*100+0.5)
-    integer units. estimated_value rounds as ROUND(x * 100D) / 100D,
-    the oracle's ROUND(x, 2) formula: Spark's two-place ROUND rounds
-    the double's decimal string HALF_UP, DuckDB rounds x·100 half
-    away from zero, and the two differ when x·100 lands exactly on a
-    .5 that x's own decimal string does not show
+    CONSTRUCTION COST: the plan is declared as TWO parameterized
+    spark.sql statements, a handful of py4j round trips, where the
+    same plan as a ~300-call Column tree cost 1.14s of driver time to
+    construct at sf0.1 against 0.58s in its jobs (SCALE.md §Round 12).
+    D-suffixed literals keep the arithmetic in doubles, as the oracle
+    computes it. The fixed-point spend sum goes through spark_sql_dsum,
+    which keeps the overflow and NaN traps of plans/_parity.py with
+    the same floor(x*100+0.5) integer units. estimated_value rounds as
+    ROUND(x * 100D) / 100D, the oracle's ROUND(x, 2) formula: Spark's
+    two-place ROUND rounds the double's decimal string HALF_UP, DuckDB
+    rounds x·100 half away from zero, and the two differ when x·100
+    lands exactly on a .5 that x's own decimal string does not show
     (349230.58499999996 · 100 = 34923058.5 at sf0.1).
 
     Scale notes unchanged from rounds 9-11: rank-first cap (the
@@ -356,6 +338,74 @@ def cross_sell_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _blocked_part_pairs(
+    spark: SparkSession, sf_dir: str, *cols: str | Column
+) -> DataFrame:
+    """``part`` self-joined within blocks: the same first name word
+    (``block_key``) and the same ``p_size``, each unordered pair once
+    (``a.p_partkey < b.p_partkey``). Both sides, aliased ``a`` and
+    ``b``, carry ``p_partkey``, ``p_name``, ``p_size``, the caller's
+    extra part columns ``cols`` and ``block_key``.
+
+    The input is repartitioned on the join keys to an explicit
+    ``defaultParallelism * 2`` partitions: AQE's coalescer sizes
+    partitions by shuffle bytes and would fold the narrow part
+    projection into one partition, so every block's pairs (and the
+    per-pair similarity work above the join) would run on one core;
+    a REPARTITION_BY_NUM exchange is exempt from coalescing. The
+    ``shuffle_hash`` hint keeps both sides the identical subplan, so
+    the projection is computed once and its exchange reused; a
+    broadcast side would re-run it and ship a build side that grows
+    with the corpus to every task. SCALE.md §Round 13/14 has the
+    measurements."""
+    n_parts = spark.sparkContext.defaultParallelism * 2
+    p = load_table(spark, sf_dir, "part").select(
+        "p_partkey", "p_name", "p_size", *cols,
+        F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("block_key"),
+    ).repartition(n_parts, F.col("block_key"), F.col("p_size"))
+    a, b = p.alias("a").hint("shuffle_hash"), p.alias("b")
+    return a.join(
+        b,
+        (F.col("a.block_key") == F.col("b.block_key"))
+        & (F.col("a.p_size") == F.col("b.p_size"))
+        & (F.col("a.p_partkey") < F.col("b.p_partkey")),
+    )
+
+
+def _name_tokens() -> Column:
+    """Distinct words of ``p_name``, split once per part row so a pair
+    join carries small arrays instead of re-splitting per pair."""
+    return F.array_distinct(F.split(F.col("p_name"), " ")).alias("toks")
+
+
+def _er_rule_features() -> list[Column]:
+    """The cheap features of the ER rule score over a blocked pair
+    (entity_resolution.py:398-446): token Jaccard, same brand and the
+    min/max size ratio. Both sides must carry ``p_brand`` and
+    :func:`_name_tokens`."""
+    return [
+        jaccard_tokens(F.col("a.toks"), F.col("b.toks")).alias("jac"),
+        F.when(F.col("a.p_brand") == F.col("b.p_brand"), 1.0)
+        .otherwise(0.0)
+        .alias("same_brand"),
+        (
+            F.least(F.col("a.p_size"), F.col("b.p_size")).cast("double")
+            / F.greatest(F.col("a.p_size"), F.col("b.p_size"))
+        ).alias("size_ratio"),
+    ]
+
+
+def _er_rule_score() -> Column:
+    """0.4·lev_sim + 0.3·jac + 0.2·same_brand + 0.1·size_ratio over
+    the bound feature columns."""
+    return (
+        0.4 * F.col("lev_sim")
+        + 0.3 * F.col("jac")
+        + 0.2 * F.col("same_brand")
+        + 0.1 * F.col("size_ratio")
+    )
+
+
 @register(
     "blocked_similarity_join",
     oracle="""
@@ -385,37 +435,10 @@ def blocked_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(block²) instead of O(n²) — the same reason the reference blocks,
     but as a shuffle-partitioned hash join instead of a dict of
     nested loops."""
-    n_parts = spark.sparkContext.defaultParallelism * 2
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_size",
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("block_key"),
-    ).repartition(n_parts, F.col("block_key"), F.col("p_size"))
-    # EXPLICIT repartition on the join keys (round 13): AQE's
-    # coalescer sizes partitions by shuffle BYTES, and 20k narrow
-    # part rows are ~1 MB — it folded the probe to ONE partition, so
-    # all ~500k candidate pairs ran their Levenshtein DP on one core
-    # (the round-1 coalescer lesson, found here by job decomposition:
-    # one 1.62s task was 85% of the wall). REPARTITION_BY_NUM is
-    # exempt from coalescing; same-session adjacent A/B min-of-6 at
-    # sf0.1: 1.794s → 0.576s, outputs exact-equal — the query now
-    # BEATS its DuckDB oracle (~1.0s). The explicit spread is also
-    # the 100 TB shape: pair-generation cost is per-block CPU, not
-    # bytes, so the partitioner must key on the block, not the size.
-    # shuffle_hash, not broadcast: both sides are the IDENTICAL
-    # scan+block-key projection, so the shuffled join computes that
-    # subplan once and reuses the exchange; an AQE broadcast would
-    # re-run the projection to build the hash relation (round-1
-    # lesson, re-measured round 3: ~0.2s at sf0.1).
-    a, b = p.alias("a").hint("shuffle_hash"), p.alias("b")
+    pairs = _blocked_part_pairs(spark, sf_dir)
     sim = levenshtein_similarity(F.col("a.p_name"), F.col("b.p_name"))
     return (
-        a.join(
-            b,
-            (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col("a.p_size") == F.col("b.p_size"))
-            & (F.col("a.p_partkey") < F.col("b.p_partkey")),
-        )
-        .where(sim >= 0.5)
+        pairs.where(sim >= 0.5)
         .select(
             F.col("a.p_partkey").alias("part1_id"),
             F.col("b.p_partkey").alias("part2_id"),
@@ -460,8 +483,7 @@ def token_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # need salting or a composite key; here the block count IS the
     # reference's blocking design.
     p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand", "p_size",
-        F.array_distinct(F.split(F.col("p_name"), " ")).alias("toks"),
+        "p_partkey", "p_brand", "p_size", _name_tokens()
     ).repartition(n_parts, F.col("p_brand"))
     a, b = p.alias("a").hint("shuffle_hash"), p.alias("b")
     return (
@@ -616,51 +638,13 @@ def er_match_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     short-circuit → weighted rule score threshold, with a reasons list
     built from when()-guarded flags (reference builds it with Python
     appends). One blocked join + one projection; no per-pair Python."""
-    # Tokenize per PART (20k rows) before the join, not per PAIR
-    # (500k at sf0.1): the join carries small token arrays instead of
-    # re-splitting both names for every pair.
-    n_parts = spark.sparkContext.defaultParallelism * 2
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_brand", "p_size",
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("block_key"),
-        F.array_distinct(F.split(F.col("p_name"), " ")).alias("toks"),
-    ).repartition(n_parts, F.col("block_key"), F.col("p_size"))
-    # shuffle_hash self-join on the key-repartitioned input (round 13
-    # — replaces the earlier broadcast(p) form): the broadcast side
-    # was the WHOLE part table, a payload that grows with the corpus
-    # (200k rows with token arrays at the 10× decade, ~2M rows / ~1 GB
-    # at 100× — a hard ceiling), and the round-13 relational decade
-    # sweep caught it as 7-27s variance at 10× (broadcast build + GC
-    # churn). With both sides the identical key-partitioned subplan,
-    # the shuffled join computes the projection once (ReusedExchange)
-    # and nothing corpus-sized ships to every task. Adjacent A/B
-    # min-of-4: sf0.1 0.95s (broadcast) vs 0.99s (shuffle) — a tie;
-    # 10× decade 3.03 vs 2.61s — outputs exact-equal. The explicit
-    # key repartition is the AQE byte-coalescer guard every pair
-    # generator now carries (blocked_similarity_join comment).
-    a, b = p.alias("a").hint("shuffle_hash"), p.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.block_key") == F.col("b.block_key"))
-        & (F.col("a.p_size") == F.col("b.p_size"))
-        & (F.col("a.p_partkey") < F.col("b.p_partkey")),
-    )
-    # Cheap features first: jaccard over the pre-split token arrays,
-    # brand/size equality, exact-name flag — as bound columns they are
-    # computed once per pair instead of once per use.
+    pairs = _blocked_part_pairs(spark, sf_dir, "p_brand", _name_tokens())
     cheap = pairs.select(
         F.col("a.p_partkey").alias("id1"),
         F.col("b.p_partkey").alias("id2"),
         F.col("a.p_name").alias("name1"),
         F.col("b.p_name").alias("name2"),
-        jaccard_tokens(F.col("a.toks"), F.col("b.toks")).alias("jac"),
-        F.when(F.col("a.p_brand") == F.col("b.p_brand"), 1.0)
-        .otherwise(0.0)
-        .alias("same_brand"),
-        (
-            F.least(F.col("a.p_size"), F.col("b.p_size")).cast("double")
-            / F.greatest(F.col("a.p_size"), F.col("b.p_size"))
-        ).alias("size_ratio"),
+        *_er_rule_features(),
         (F.col("a.p_name") == F.col("b.p_name")).alias("exact"),
     )
     # Lossless pre-gate before the Levenshtein DP: with lev_sim ≤ 1 and
@@ -676,12 +660,6 @@ def er_match_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "*",
         levenshtein_similarity(F.col("name1"), F.col("name2")).alias("lev_sim"),
     )
-    score = (
-        0.4 * F.col("lev_sim")
-        + 0.3 * F.col("jac")
-        + 0.2 * F.col("same_brand")
-        + 0.1 * F.col("size_ratio")
-    )
     scored = feats.select(
         "id1",
         "id2",
@@ -689,7 +667,7 @@ def er_match_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lev_sim",
         "jac",
         "same_brand",
-        score.alias("score"),
+        _er_rule_score().alias("score"),
     )
     reasons = F.concat_ws(
         ";",
@@ -759,41 +737,15 @@ def jaro_winkler_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's jaro core. Neither engine's builtin implements the
     reference's odd-transposition behavior, which is exactly why F5
     is a UDF."""
-    n_parts = spark.sparkContext.defaultParallelism * 2
-    # Repartition the INPUT on the join keys, not the joined pairs
-    # (round 13): the post-join repartition both shuffled the ~25×
-    # larger pair stream AND left the probe itself on the ONE
-    # partition AQE's byte-based coalescer folded the 20k-row input
-    # to — a ~4s single task generated every candidate pair before
-    # any spread happened (same defect as blocked_similarity_join,
-    # same fix; adjacent A/B min-of-6 at sf0.1: 4.525s → 1.427s,
-    # outputs exact-equal). The pre-join spread also distributes the
-    # pandas-UDF stage without any extra exchange.
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_size",
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("block_key"),
-    ).repartition(n_parts, F.col("block_key"), F.col("p_size"))
-    a, b = p.alias("a").hint("shuffle_hash"), p.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col("a.p_size") == F.col("b.p_size"))
-            & (F.col("a.p_partkey") < F.col("b.p_partkey")),
-        )
-        .select(
-            F.col("a.p_partkey").alias("id1"),
-            F.col("b.p_partkey").alias("id2"),
-            F.col("a.p_name").alias("name1"),
-            F.col("b.p_name").alias("name2"),
-        )
+    pairs = _blocked_part_pairs(spark, sf_dir).select(
+        F.col("a.p_partkey").alias("id1"),
+        F.col("b.p_partkey").alias("id2"),
+        F.col("a.p_name").alias("name1"),
+        F.col("b.p_name").alias("name2"),
     )
     # Fenced instance (asNondeterministic): the `jw >= 0.9` filter
     # below references the UDF's output column, and without the fence
-    # the optimizer pushes the filter below a DUPLICATED Arrow eval
-    # (guide §4.4; plans/r14/jaro_winkler_pairs_before.txt). The fence
-    # is applied here at the call site — the exported
-    # jaro_winkler_textbook stays deterministic (round-15 ADVICE).
+    # the optimizer pushes the filter below a duplicated Arrow eval.
     scored = pairs.withColumn(
         "jw", jaro_winkler_textbook_fenced(F.col("name1"), F.col("name2"))
     )
@@ -866,53 +818,16 @@ def er_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold; nothing is rescanned per threshold."""
     from ..ml.entity_resolution import evaluate_matches
 
-    n_parts = spark.sparkContext.defaultParallelism * 2
-    # shuffle_hash self-join on the key-repartitioned input (round 14
-    # — replaces the earlier broadcast(p) form, the same corpus-sized
-    # broadcast the round-13 decade sweep caught in er_match_cascade:
-    # the build side was the WHOLE part projection with token arrays,
-    # a payload that grows linearly with the corpus — ~1 GB at the
-    # 100× decade, a hard ceiling, with broadcast-build/GC variance
-    # well before that). Both sides are the identical key-partitioned
-    # subplan, so the shuffled join computes the projection once
-    # (ReusedExchange) and nothing corpus-sized ships to every task;
-    # the explicit (block_key, p_size) repartition is the AQE
-    # byte-coalescer guard every pair generator carries. The reference
-    # sweep (entity_resolution.py:554-613) iterates blocked pairs with
-    # no broadcast semantics to preserve. Adjacent A/B + 10× decade in
-    # SCALE.md §Round 14.
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_brand", "p_size",
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("block_key"),
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(2)).alias("word2"),
-        F.array_distinct(F.split(F.col("p_name"), " ")).alias("toks"),
-    ).repartition(n_parts, F.col("block_key"), F.col("p_size"))
-    a, b = p.alias("a").hint("shuffle_hash"), p.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.block_key") == F.col("b.block_key"))
-        & (F.col("a.p_size") == F.col("b.p_size"))
-        & (F.col("a.p_partkey") < F.col("b.p_partkey")),
+    word2 = F.split_part(F.col("p_name"), F.lit(" "), F.lit(2)).alias("word2")
+    pairs = _blocked_part_pairs(
+        spark, sf_dir, "p_brand", word2, _name_tokens()
     ).select(
-        jaccard_tokens(F.col("a.toks"), F.col("b.toks")).alias("jac"),
-        F.when(F.col("a.p_brand") == F.col("b.p_brand"), 1.0)
-        .otherwise(0.0)
-        .alias("same_brand"),
-        (
-            F.least(F.col("a.p_size"), F.col("b.p_size")).cast("double")
-            / F.greatest(F.col("a.p_size"), F.col("b.p_size"))
-        ).alias("size_ratio"),
+        *_er_rule_features(),
         levenshtein_similarity(F.col("a.p_name"), F.col("b.p_name")).alias("lev_sim"),
         (F.col("a.word2") == F.col("b.word2")).cast("int").alias("is_match_label"),
     )
     scored = pairs.select(
-        (
-            0.4 * F.col("lev_sim")
-            + 0.3 * F.col("jac")
-            + 0.2 * F.col("same_brand")
-            + 0.1 * F.col("size_ratio")
-        ).alias("match_score"),
-        "is_match_label",
+        _er_rule_score().alias("match_score"), "is_match_label"
     )
     ev = evaluate_matches(scored, thresholds=(0.6, 0.7, 0.8, 0.9))
     return ev.select(

@@ -33,7 +33,6 @@ from ..operators.dedup import (
     base_hash,
     exact_duplicates,
     near_dup_pairs,
-    simhash16,
     simhash16_from_hashes,
 )
 from ..operators.similarity_search import (

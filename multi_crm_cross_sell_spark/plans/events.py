@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.bronze import load_table
-from ._parity import davg, dsum, sql_davg, sql_dsum
+from ._parity import dsum, sql_dsum
 from .registry import register
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.bronze import load_table
-from ._parity import davg, dsum, sql_davg, sql_dsum
+from ._parity import dsum
 from .registry import register
 
 

@@ -103,46 +103,3 @@ def stateful_dedup(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
         timeoutConf=timeout,
     )
 
-
-def running_totals_tws(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Spark 4 twin of ``running_totals`` on the transformWithState
-    API: typed ValueState handles instead of a single state tuple, and
-    room for multiple state variables / timers per key. Requires the
-    RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass) — which is also the
-    100 TB choice: state spills to disk per partition instead of
-    living on the executor heap.
-
-    NOTE: the transformWithState driver worker imports google.protobuf
-    at query start; in environments without protobuf (this container)
-    the query fails at initialization — use ``running_totals`` (the
-    applyInPandasWithState path) there. The operator itself is
-    exercised by tests/test_streaming.py when protobuf is present."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", RUNNING_STATE)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType=RUNNING_OUT,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -8,7 +8,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from multi_crm_cross_sell_spark.operators.dedup import P, shingles
+from multi_crm_cross_sell_spark.operators.dedup import P
 from multi_crm_cross_sell_spark.operators.similarity_search import (
     embedding_near_dup_pairs,
 )
@@ -22,23 +22,6 @@ _ROLL_R = 1_000_003
 
 def _py_base_hash(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P
-
-
-class TestShingles:
-    def test_trigram_values(self, spark):
-        df = spark.createDataFrame([("a b c d",)], ["text"])
-        [row] = df.select(shingles(F.col("text")).alias("sh")).collect()
-        assert row.sh == ["a b c", "b c d"]
-
-    def test_short_doc_yields_empty_not_error(self, spark):
-        df = spark.createDataFrame([("a b",), ("a",), ("",)], ["text"])
-        rows = df.select(shingles(F.col("text")).alias("sh")).collect()
-        assert all(r.sh == [] for r in rows)
-
-    def test_distinct(self, spark):
-        df = spark.createDataFrame([("x y z x y z x y z",)], ["text"])
-        [row] = df.select(shingles(F.col("text")).alias("sh")).collect()
-        assert sorted(row.sh) == sorted(set(row.sh))
 
 
 class TestRollingHash:
@@ -350,18 +333,14 @@ class TestBandedSimhash:
         out = all_queries()["ngram_jaccard_dedup"].fn(spark, sf).toPandas()
         docs = spark.read.parquet(f"{sf}/documents.parquet")
         from multi_crm_cross_sell_spark.operators.dedup import (
-            GRAM_K,
-            base_hash,
-            gram_hashes_from_words,
-            word_hashes,
+            gram_hashes_sql,
+            word_hashes_sql,
         )
 
         hashed = (
             docs.where(F.size(F.split(F.col("text"), " ")) >= 2)
-            .select("doc_id", word_hashes(F.col("text")).alias("wh"))
-            .select(
-                "doc_id", gram_hashes_from_words(F.col("wh"), 2).alias("bg")
-            )
+            .selectExpr("doc_id", f"{word_hashes_sql('text')} AS wh")
+            .selectExpr("doc_id", f"{gram_hashes_sql('wh', 2)} AS bg")
             .localCheckpoint()
         )
         a = hashed.select(F.col("doc_id").alias("doc1"), F.col("bg").alias("b1"))
@@ -1073,6 +1052,34 @@ class TestNearDupPairsLargeBranch:
         )
         assert small, "fixture corpus must contain near-dup pairs"
         assert large == small
+
+    def test_large_branch_runs_candidates_before_broadcast(self, spark, sf_dir):
+        """The candidate pairs are materialized by a job of their own
+        while the plan is built, so the broadcast of the candidate-id
+        set reads stored rows. Without adaptive execution the shuffles
+        below a broadcast run inside its build job, capped by
+        spark.sql.broadcastTimeout; with a lazy candidate checkpoint
+        that one build job ran the whole signature and band-join
+        pipeline."""
+        from multi_crm_cross_sell_spark.operators.dedup import near_dup_pairs
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        sc = spark.sparkContext
+        group = "near_dup_pairs_large_construct"
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        sc.setJobGroup(group, "construct near_dup_pairs' large branch")
+        try:
+            near_dup_pairs(docs, threshold=0.6, n_docs=10**9)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        tracker = sc.statusTracker()
+        jobs = [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
+        # the candidate job, then the build of the candidate-id broadcast
+        assert len(jobs) >= 2, jobs
+        assert all(j.status == "SUCCEEDED" for j in jobs), jobs
 
 
 class TestIncrementalNearDup:

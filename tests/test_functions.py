@@ -252,7 +252,7 @@ class TestJaroWinklerFloorBatchKernel:
 
     def test_floor_udf_null_and_nonascii_rows(self, spark):
         from multi_crm_cross_sell_spark.functions.similarity import (
-            jaro_winkler_textbook,
+            jaro_winkler_floor_udf,
         )
 
         df = spark.createDataFrame(
@@ -265,7 +265,7 @@ class TestJaroWinklerFloorBatchKernel:
             ["a", "b"],
         )
         rows = df.select(
-            jaro_winkler_textbook(F.col("a"), F.col("b")).alias("jw")
+            jaro_winkler_floor_udf(F.col("a"), F.col("b")).alias("jw")
         ).collect()
         assert rows[0]["jw"] == _jaro_winkler(
             "MARTHA", "MARHTA", floor_transpositions=True

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 
 from multi_crm_cross_sell_spark.plans import all_queries
 
@@ -52,13 +53,22 @@ def test_minhash_band_join_reuses_exchange(spark):
     assert "ShuffledHashJoin" in plan, plan
 
 
-def test_er_sweep_pair_join_never_broadcasts_corpus(spark):
-    # round-14 fix (r13 verdict item 2): the threshold sweep's blocked
-    # self-join must be the shuffle_hash form on the key-repartitioned
-    # input — its build side is the WHOLE part projection, which grows
-    # with the corpus (~1 GB at the 100x decade), so a broadcast here
-    # is a scale ceiling regardless of sf0.001's size.
-    df = all_queries()["er_threshold_sweep"].fn(spark, SF)
+@pytest.mark.parametrize(
+    "name",
+    [
+        "blocked_similarity_join",
+        "er_match_cascade",
+        "jaro_winkler_pairs",
+        "er_threshold_sweep",
+    ],
+)
+def test_blocked_part_pair_join_never_broadcasts_corpus(spark, name):
+    # The blocked part self-join must stay the shuffle_hash form on the
+    # key-repartitioned input: its build side is the whole part
+    # projection, which grows with the corpus (~1 GB at the 100x
+    # decade), so a broadcast here is a scale ceiling regardless of
+    # sf0.001's size.
+    df = all_queries()[name].fn(spark, SF)
     df.write.mode("overwrite").format("noop").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan, plan
