@@ -134,8 +134,10 @@ def near_dup_pairs(
 
     - ``n_docs`` ≥ CHECKPOINT_MIN_CORPUS (caller-supplied, e.g. the
       parquet footer): the NARROW per-doc band-key frame is
-      materialized ONCE behind a lazy localCheckpoint (the
-      incremental_near_dup discipline) and both band-join sides
+      materialized ONCE by a ``localCheckpoint(eager=False)`` (the
+      incremental_near_dup discipline; under adaptive execution its
+      shuffle stages run while the plan is built, and only its last
+      stage waits for the first action) and both band-join sides
       explode from it — one signature pass, cheap-string explodes;
       the candidate pairs are checkpointed; and the verify sides
       recompute gram arrays ONLY for documents that appear in a
@@ -237,8 +239,8 @@ def near_dup_pairs(
         # semi-joins the scan BELOW the md5/gram pipeline, so the
         # verify-side heavy work is candidate-sized, not corpus-sized
         # — and no corpus gram table is ever built or broadcast. The
-        # candidates materialize eagerly, in their own job: behind a
-        # lazy checkpoint, a plan without adaptive execution runs the
+        # candidates materialize eagerly, in their own job: behind an
+        # eager=False checkpoint, a plan without adaptive execution runs the
         # whole signature and band-join pipeline inside the broadcast
         # build of ``ids``, which spark.sql.broadcastTimeout caps.
         cand = cand.localCheckpoint(eager=True)
@@ -291,7 +293,7 @@ def near_dup_pairs(
 
 
 
-# Below this corpus size the lazy-checkpoint job that materializes the
+# Below this corpus size the checkpoint job that materializes the
 # narrow band-key frame costs more than simply running the signature
 # pipeline once per band side (the per-job scheduling floor dominates
 # sub-second pipelines); above it, recomputing the minhash transforms
@@ -326,7 +328,9 @@ def incremental_near_dup(
     would then be canonically different subplans and ReusedExchange
     could never fire (the column-pruning lesson in its filter form);
     instead the NARROW band-key frame (doc_id + 8 short strings) is
-    materialized ONCE behind a lazy localCheckpoint and both join
+    materialized ONCE by a ``localCheckpoint(eager=False)`` (under
+    adaptive execution its shuffle stages run while the plan is built;
+    only its last stage waits for the first action) and both join
     sides explode from it, while the two verify sides keep the
     flowing gram pipeline (shared via ReusedExchange when they plan
     as shuffle joins; broadcast per side at small inputs). That is
@@ -572,9 +576,12 @@ def dedup_clusters(
         # (every node appears exactly once on the labels side, so the
         # conditional max recovers it through the min-aggregate) —
         # round 11: this deletes the per-iteration new-vs-old join,
-        # and the convergence count materializes a LAZY checkpoint,
-        # so each iteration is ONE action (eager ckpt + join + count
-        # was three; dedup_keep_best 33 -> ~20 jobs at sf0.1).
+        # and the convergence count materializes the eager=False
+        # checkpoint (eager ckpt + join + count was three actions;
+        # dedup_keep_best 33 -> ~20 jobs at sf0.1). eager=False defers
+        # only the checkpoint's last stage: under adaptive execution
+        # the join and the aggregate's map side run as jobs when
+        # localCheckpoint builds the RDD, before the count.
         prop = edges.join(
             labels, edges["src"] == labels["node"]
         ).select(

@@ -211,8 +211,11 @@ def cross_sell_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes unchanged from rounds 9-11: rank-first cap (the
     aggregate sees only top-k customers via a broadcast semi-filter),
-    lazy RDD checkpoint of the capped frame so the rename-divergent
-    self-join sides share one computation, explicit broadcast of the
+    an RDD checkpoint (``localCheckpoint(eager=False)``) of the capped
+    frame so the rename-divergent self-join sides share one computation
+    — under adaptive execution its shuffle and broadcast stages run
+    while this function builds the plan, and only its last stage waits
+    for the caller's action, explicit broadcast of the
     pair side (the checkpointed frame carries no stats — without the
     hint the non-equi join falls back to CartesianProduct), and
     ORDER BY + LIMIT planning as TakeOrderedAndProject (per-partition

@@ -266,11 +266,44 @@ def event_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _replay_as_stream(spark: SparkSession, events: DataFrame, op, output_mode: str,
+                      prefix: str) -> DataFrame:
+    """Land ``events`` as parquet, with ``ts`` as a plain timestamp
+    (the type the stateful operators' schemas declare) and
+    ``coalesce(2)`` (at most two files, never more partitions than
+    ``events`` has); stream it back one file per micro-batch through
+    ``op`` with Trigger.AvailableNow; append every micro-batch's output
+    to parquet and return what was emitted. The work dir is a fresh
+    ``mkdtemp``, so each call starts from an empty checkpoint."""
+    import tempfile
+
+    from ..streaming.trigger import available_now
+    from ..streaming.windows import stream_source
+
+    work = tempfile.mkdtemp(prefix=prefix)
+    src = f"{work}/src"
+    events.withColumn("ts", F.col("ts").cast("timestamp")).coalesce(2).write.parquet(
+        src, mode="overwrite"
+    )
+    stream = stream_source(
+        spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
+    )
+    out = f"{work}/out"
+    writer = (
+        op(stream)
+        .writeStream.foreachBatch(
+            lambda bdf, _bid: bdf.write.mode("append").parquet(out)
+        )
+        .outputMode(output_mode)
+    )
+    available_now(spark, writer, f"{work}/ck")
+    return spark.read.parquet(out)
+
+
 @register(
     "stateful_running_totals",
-    # The PROCESS is arbitrary-state streaming, but the FINAL state is
-    # exactly the batch aggregate — the invariant the docstring always
-    # asserted, now enforced as a hard oracle: after the last
+    # The PROCESS is a stateful stream, but the FINAL state is exactly
+    # the batch aggregate, enforced as a hard oracle: after the last
     # micro-batch, per-user (count, sum) must equal GROUP BY user_id
     # over the whole table. Values are exact cents, so float
     # accumulation error (~1e-13) vanishes under ROUND(·, 6) in both
@@ -282,43 +315,31 @@ def event_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    tags=("streaming", "stateful", "applyInPandasWithState", "ST3"),
+    tags=("streaming", "stateful", "ST3"),
 )
 def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-user running count/sum maintained in the state store across
-    micro-batches (streaming/stateful.py). Runs the REAL streaming
-    query with Trigger.AvailableNow over the events table (two
-    micro-batches via maxFilesPerTrigger) and returns the final state
-    per user — which must equal the batch groupBy over the same table,
-    encoded as the DuckDB oracle (the state-store path and the batch
-    path must agree bit-for-bit after cent-safe rounding)."""
-    import tempfile
+    """Per-user running count/sum kept in the state store
+    (streaming/stateful.running_totals, a streaming groupBy().agg() in
+    update mode). Lands the events table as parquet, runs the REAL
+    streaming query over it with Trigger.AvailableNow, one file per
+    micro-batch, and returns the final state per user — which must
+    equal the batch groupBy over the same table, encoded as the DuckDB
+    oracle (the state-store path and the batch path must agree
+    bit-for-bit after cent-safe rounding).
 
+    The table is written with ``coalesce(2)``, which never adds
+    partitions: a table read as one partition (each test fixture's
+    single-row-group events file, a one-day delta) lands as one file
+    and runs as ONE micro-batch, so this query alone does not exercise
+    state carried across batches. tests/test_streaming.py's two-file tests
+    (``test_stateful_running_totals``, ``test_stateful_dedup_exactly_once``)
+    do."""
     from ..streaming.stateful import running_totals
-    from ..streaming.windows import stream_source
 
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
+    upd = _replay_as_stream(
+        spark, load_table(spark, sf_dir, "events"), running_totals, "update",
+        "stateful_rt_",
     )
-    work = tempfile.mkdtemp(prefix="stateful_rt_")
-    src = f"{work}/src"
-    ev.coalesce(2).write.parquet(src, mode="overwrite")
-    schema = spark.read.parquet(src).schema
-    stream = stream_source(spark, src, schema, max_files_per_trigger=1)
-    out = f"{work}/out"
-    q = (
-        running_totals(stream)
-        .writeStream.foreachBatch(
-            lambda bdf, _bid: bdf.write.mode("append").parquet(out)
-        )
-        .option("checkpointLocation", f"{work}/ck")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "streaming query did not finish within 600s"
-    upd = spark.read.parquet(out)
     return (
         upd.groupBy("user_id")
         .agg(
@@ -356,33 +377,13 @@ def stateful_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies, so every id is re-delivered, many across batch
     boundaries), streams it with Trigger.AvailableNow, and returns the
     emitted rows — which must reproduce the original table exactly."""
-    import tempfile
-
     from ..streaming.stateful import stateful_dedup
-    from ..streaming.windows import stream_source
 
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
+    ev = load_table(spark, sf_dir, "events")
+    emitted = _replay_as_stream(
+        spark, ev.unionByName(ev), stateful_dedup, "append", "stateful_dd_"
     )
-    doubled = ev.unionByName(ev)
-    work = tempfile.mkdtemp(prefix="stateful_dd_")
-    src = f"{work}/src"
-    doubled.coalesce(2).write.parquet(src, mode="overwrite")
-    schema = spark.read.parquet(src).schema
-    stream = stream_source(spark, src, schema, max_files_per_trigger=1)
-    out = f"{work}/out"
-    q = (
-        stateful_dedup(stream)
-        .writeStream.foreachBatch(
-            lambda bdf, _bid: bdf.write.mode("append").parquet(out)
-        )
-        .option("checkpointLocation", f"{work}/ck")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600), "streaming query did not finish within 600s"
-    return spark.read.parquet(out).select(
+    return emitted.select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
 

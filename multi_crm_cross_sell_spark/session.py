@@ -7,8 +7,12 @@ the driver harness share one config surface:
 - AQE on (runtime coalescing, skew-join splitting, dynamic join
   strategy switch) — at 100 TB the static plan is always wrong
   somewhere; AQE fixes partition counts and skew at runtime.
-- shuffle.partitions sized for the local harness (32); on a real
-  cluster AQE's coalescing makes a high initial value safe.
+- shuffle.partitions sized for the local harness (32); in batch plans
+  AQE's coalescing makes a high initial value safe. Streaming queries
+  are sized apart: AQE never coalesces a streaming shuffle, so a
+  stateful operator would run 32 tasks and state stores in every
+  micro-batch. streaming/trigger.available_now runs them at the
+  session's defaultParallelism instead.
 - Arrow enabled for any pandas-UDF path (vectorized, batched transfer).
 - Session timezone pinned to UTC: the testdata timestamps are naive
   (timestamp_ntz) and the DuckDB oracle is timezone-less, so every

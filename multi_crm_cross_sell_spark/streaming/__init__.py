@@ -1,3 +1,3 @@
-from . import joins, sinks, windows  # noqa: F401
+from . import joins, sinks, trigger, windows  # noqa: F401
 
-__all__ = ["joins", "sinks", "windows"]
+__all__ = ["joins", "sinks", "trigger", "windows"]

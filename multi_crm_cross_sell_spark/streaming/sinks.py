@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.streaming import StreamingContext  # noqa: F401  (namespace parity)
 
+from .trigger import available_now
+
 
 def merge_append_sink(target_path: str, key_cols: list[str]):
     """Returns a foreachBatch callback that appends only rows whose key
@@ -34,16 +36,12 @@ def merge_append_sink(target_path: str, key_cols: list[str]):
 
 
 def foreach_batch_log(stream_df: DataFrame, target_path: str, checkpoint: str,
-                      key_cols: list[str], max_files_per_trigger: int | None = None):
+                      key_cols: list[str]):
     """ST3: run the stream into the merge sink with AvailableNow."""
-    q = (
-        stream_df.writeStream.foreachBatch(merge_append_sink(target_path, key_cols))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    writer = stream_df.writeStream.foreachBatch(
+        merge_append_sink(target_path, key_cols)
     )
-    q.awaitTermination()
-    return q
+    return available_now(stream_df.sparkSession, writer, checkpoint)
 
 
 class SyncLogListener:

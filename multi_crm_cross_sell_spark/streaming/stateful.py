@@ -1,22 +1,30 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Stateful streaming operators.
 
 The reference's stateful behaviors are batch workarounds: a 100-record
 buffered log flush (src/ml/feedback_logging.py:212-214, 327-384) and
 re-query-everything incremental sync (src/utils/data_contracts.py:
-235-275). Structured Streaming's arbitrary-state API expresses them
-directly: state lives per key in the state store, survives micro-
-batches, and scales horizontally with the shuffle partitioning of the
-grouping key — no driver-side buffers.
+235-275). In Structured Streaming, state lives per key in the state
+store, survives micro-batches, and scales horizontally with the shuffle
+partitioning of the grouping key — no driver-side buffers.
 
 Two operators:
 
 - ``running_totals``: per-key cumulative count/sum maintained across
   micro-batches, emitting the updated row once per key per batch
   (update semantics; the streaming face of the reference's funnel
-  accumulators).
+  accumulators). It is a plain streaming ``groupBy().agg()``: Spark's
+  JVM state store keeps the partial aggregates, and no Python worker
+  runs.
 - ``stateful_dedup``: exactly-once-per-key emission with an optional
   processing-time TTL — streaming dedup where ``dropDuplicates``'s
   unbounded state would OOM; TTL bounds state for 100 TB streams.
+  Spark has no built-in processing-time TTL dedup
+  (``dropDuplicatesWithinWatermark`` expires by event time), so this
+  one is an ``applyInPandasWithState`` function.
+
+The registered queries in plans/events.py start both through
+``trigger.available_now``, which sizes their state partitions to one
+task per core.
 """
 
 from __future__ import annotations
@@ -25,33 +33,16 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-RUNNING_OUT = "user_id bigint, n_events bigint, total_value double"
-RUNNING_STATE = "n bigint, total double"
-
-
-def _running_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
 
 
 def running_totals(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Per-key running count/sum across micro-batches (update mode)."""
-    return events.groupBy(key_col).applyInPandasWithState(
-        _running_fn,
-        outputStructType=RUNNING_OUT,
-        stateStructType=RUNNING_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """Per-key running count/sum across micro-batches. Run in update
+    mode, each micro-batch emits the cumulative row of every key it
+    touched."""
+    return events.groupBy(key_col).agg(
+        F.count("*").alias("n_events"), F.sum("value").alias("total_value")
     )
 
 

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .trigger import available_now
+
 
 def stream_source(spark: SparkSession, path: str, schema: StructType, fmt: str = "parquet",
                   max_files_per_trigger: int | None = None) -> DataFrame:
@@ -76,13 +78,9 @@ def run_available_now(stream_df: DataFrame, checkpoint: str, sink_path: str,
     """ST1: Trigger.AvailableNow batch-over-stream — process everything
     pending, then stop (the cron micro-batch done right: checkpointed,
     exactly-once sink)."""
-    q = (
+    writer = (
         stream_df.writeStream.format(fmt)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
         .option("path", sink_path)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return q
+    return available_now(stream_df.sparkSession, writer, checkpoint)

@@ -4,14 +4,15 @@ micro-batches."""
 
 from __future__ import annotations
 
-
 import pytest
-
-
 from pyspark.sql import functions as F
 
 from multi_crm_cross_sell_spark.sources.bronze import load_table
 from multi_crm_cross_sell_spark.streaming.sinks import foreach_batch_log
+from multi_crm_cross_sell_spark.streaming.trigger import (
+    SHUFFLE_PARTITIONS,
+    available_now,
+)
 from multi_crm_cross_sell_spark.streaming.windows import (
     run_available_now,
     stream_source,
@@ -83,36 +84,101 @@ def test_stateful_running_totals(spark, events_dir, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = stream_source(spark, src, schema, max_files_per_trigger=1)
     out = str(tmp_path / "out")
-    q = (
+    writer = (
         running_totals(stream)
         .writeStream.foreachBatch(
             lambda bdf, _bid: bdf.write.mode("append").parquet(out)
         )
-        .option("checkpointLocation", str(tmp_path / "ck"))
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
+    q = available_now(spark, writer, str(tmp_path / "ck"))
+    assert len(q.recentProgress) == 2
     got = spark.read.parquet(out)
     # last emission per user must equal the batch ground truth
-    import pyspark.sql.functions as SF
-
     last = (
         got.groupBy("user_id")
-        .agg(SF.max("n_events").alias("n_events"), SF.max("total_value").alias("tv"))
+        .agg(F.max("n_events").alias("n_events"), F.max("total_value").alias("tv"))
     )
     truth = (
         spark.read.parquet(src)
         .groupBy("user_id")
-        .agg(SF.count("*").alias("n_b"), SF.sum("value").alias("tv_b"))
+        .agg(F.count("*").alias("n_b"), F.sum("value").alias("tv_b"))
     )
     j = last.join(truth, "user_id").toPandas()
     assert len(j) > 0
     assert (j["n_events"] == j["n_b"]).all()
     assert (abs(j["tv"] - j["tv_b"]) < 1e-6).all()
-    # two micro-batches -> users seen in both emit twice (update stream)
-    assert got.count() >= last.count()
+    # two micro-batches -> users seen in both emit twice (update
+    # stream), and their second row carries the first batch's state
+    assert got.count() > last.count()
+
+
+def _running_totals_writer(spark, tmp_path, fail: bool = False):
+    from multi_crm_cross_sell_spark.streaming.stateful import running_totals
+
+    src = str(tmp_path / "src")
+    load_table(spark, SF, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    ).coalesce(1).write.parquet(src)
+    stream = stream_source(spark, src, spark.read.parquet(src).schema)
+    out = str(tmp_path / "out")
+
+    def write(bdf, _bid):
+        if fail:
+            raise RuntimeError("batch sink failed")
+        bdf.write.mode("append").parquet(out)
+
+    return running_totals(stream).writeStream.foreachBatch(write).outputMode("update")
+
+
+@pytest.fixture
+def caller_partitions(spark):
+    """The test session's shuffle partition count set to a value that
+    differs from defaultParallelism, restored afterwards."""
+    old = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, "7")
+    assert spark.sparkContext.defaultParallelism != 7
+    yield "7"
+    spark.conf.set(SHUFFLE_PARTITIONS, old)
+
+
+def test_running_totals_state_operator_is_native(spark, tmp_path, caller_partitions):
+    """running_totals runs in the JVM state store (no Python worker),
+    with one state partition per core, and the caller's session keeps
+    its own shuffle partition count."""
+    q = available_now(spark, _running_totals_writer(spark, tmp_path), str(tmp_path / "ck"))
+    op = q.lastProgress["stateOperators"][0]
+    assert op["operatorName"] == "stateStoreSave"
+    assert op["numShufflePartitions"] == spark.sparkContext.defaultParallelism
+    plan = q._jsq.explainInternal(True)
+    assert "StateStoreSave" in plan
+    assert "pandas" not in plan.lower()
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == caller_partitions
+
+
+def test_available_now_restores_partitions_when_query_raises(
+    spark, tmp_path, caller_partitions
+):
+    from pyspark.errors import StreamingQueryException
+
+    writer = _running_totals_writer(spark, tmp_path, fail=True)
+    with pytest.raises(StreamingQueryException, match="batch sink failed"):
+        available_now(spark, writer, str(tmp_path / "ck"))
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == caller_partitions
+
+
+def test_available_now_leaves_unset_partitions_unset(spark, tmp_path):
+    old = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.unset(SHUFFLE_PARTITIONS)
+    try:
+        q = available_now(
+            spark, _running_totals_writer(spark, tmp_path), str(tmp_path / "ck")
+        )
+        assert spark.conf.get(SHUFFLE_PARTITIONS, None) is None
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, old)
+    op = q.lastProgress["stateOperators"][0]
+    assert op["numShufflePartitions"] == spark.sparkContext.defaultParallelism
 
 
 def test_stateful_dedup_exactly_once(spark, events_dir, tmp_path):
@@ -125,16 +191,13 @@ def test_stateful_dedup_exactly_once(spark, events_dir, tmp_path):
     ev.coalesce(1).write.parquet(src_dup, mode="append")
     stream = stream_source(spark, src_dup, ev.schema, max_files_per_trigger=1)
     out = str(tmp_path / "out")
-    q = (
+    writer = (
         stateful_dedup(stream)
         .writeStream.format("parquet")
-        .option("checkpointLocation", str(tmp_path / "ck"))
         .option("path", out)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
+    available_now(spark, writer, str(tmp_path / "ck"))
     got = spark.read.parquet(out)
     assert got.count() == ev.count()
     assert got.select("event_id").distinct().count() == ev.count()
