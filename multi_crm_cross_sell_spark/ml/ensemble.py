@@ -8,9 +8,10 @@ Spark re-design:
 - NN → MultilayerPerceptronClassifier(layers=[d,64,32,16,2])
   (capability parity: same ensemble-member role; dropout/batchnorm are
   training details MLlib's MLP doesn't expose — SURVEY §7.3(c)).
-- XGBoost → GBTClassifier(maxDepth=6, stepSize=0.1) — gradient-boosted
-  trees of the same family (xgboost is not in this environment; an
-  import-gated SparkXGBClassifier hook is provided).
+- XGBoost → GBTClassifier(maxIter=20, maxDepth=6, stepSize=0.1) —
+  gradient-boosted trees of the same family, not xgboost parity. The
+  slot keeps the name "xgb" for the reference's vote weights and the
+  saved-model layout.
 - RandomForestClassifier(numTrees=100, maxDepth=10).
 - GradientBoosting → GBTClassifier(maxIter=100, maxDepth=5, stepSize=0.1).
 - Weighted vote + per-row score stddev = column expressions
@@ -66,31 +67,6 @@ def feature_pipeline(feature_cols: list[str], with_scaler: bool = True) -> Pipel
     return Pipeline(stages=stages)
 
 
-def _xgb_member(features_col: str, label_col: str, seed: int):
-    """XGBoost member when available, GBT(depth 6) otherwise — same
-    gradient-boosting family, import-gated (environment has no
-    xgboost)."""
-    try:  # pragma: no cover - xgboost absent in this environment
-        from xgboost.spark import SparkXGBClassifier
-
-        return SparkXGBClassifier(
-            features_col=features_col,
-            label_col=label_col,
-            n_estimators=100,
-            max_depth=6,
-            learning_rate=0.1,
-        )
-    except ImportError:
-        return GBTClassifier(
-            featuresCol=features_col,
-            labelCol=label_col,
-            maxIter=20,
-            maxDepth=6,
-            stepSize=0.1,
-            seed=seed,
-        )
-
-
 @dataclass
 class EnsembleScorer:
     """Four MLlib members + weighted vote (ML3-ML7).
@@ -121,7 +97,14 @@ class EnsembleScorer:
             maxIter=self.nn_iters,
             seed=self.seed,
         )
-        xgb = _xgb_member("features", self.label_col, self.seed)
+        xgb = GBTClassifier(
+            featuresCol="features",
+            labelCol=self.label_col,
+            maxIter=20,
+            maxDepth=6,
+            stepSize=0.1,
+            seed=self.seed,
+        )
         rf = RandomForestClassifier(
             featuresCol="features",
             labelCol=self.label_col,
@@ -182,9 +165,7 @@ class EnsembleModel:
     def load(cls, path: str) -> "EnsembleModel":
         """ML17 round-trip (reference orchestrator.py:356-373 reloads
         the pickled ensemble; here each member reloads via its MLlib
-        model class). The xgb slot is import-gated like _xgb_member:
-        xgboost's model when the package exists, the GBT stand-in
-        otherwise."""
+        model class; the xgb slot holds a GBT model)."""
         from pyspark.ml.classification import (
             GBTClassificationModel,
             MultilayerPerceptronClassificationModel,
@@ -196,13 +177,8 @@ class EnsembleModel:
             "nn": MultilayerPerceptronClassificationModel.load(f"{path}/nn"),
             "rf": RandomForestClassificationModel.load(f"{path}/rf"),
             "gb": GBTClassificationModel.load(f"{path}/gb"),
+            "xgb": GBTClassificationModel.load(f"{path}/xgb"),
         }
-        try:  # pragma: no cover - xgboost absent in this environment
-            from xgboost.spark import SparkXGBClassifierModel
-
-            members["xgb"] = SparkXGBClassifierModel.load(f"{path}/xgb")
-        except ImportError:
-            members["xgb"] = GBTClassificationModel.load(f"{path}/xgb")
         return cls(features=features, members=members)
 
     def feature_importances(self) -> dict[str, list[float]]:

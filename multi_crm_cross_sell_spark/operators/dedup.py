@@ -19,8 +19,6 @@ Scale design:
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -37,25 +35,22 @@ SHINGLE = 3
 GRAM_K = 1_000_003
 
 
-def base_hash(col: Column) -> Column:
-    """md5 → first 15 hex chars → bigint (60 bits) → mod P."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint") % P
-
-
-# Spark-SQL text builders for the MinHash pipeline. They are assembled
-# as strings because one selectExpr is one py4j round trip, where the
-# same expressions built operator by operator as Columns cost about
-# 0.8 s of driver time per query construction (16 minhash lambdas and
-# 8 band keys).
+# Spark-SQL text builders for the md5 hashes. They are assembled as
+# strings because one selectExpr is one py4j round trip, where the same
+# expressions built operator by operator as Columns cost about 0.8 s of
+# driver time per MinHash query construction (16 minhash lambdas and 8
+# band keys).
 
 
 def base_hash_sql(x: str) -> str:
+    """md5 → first 15 hex chars → bigint (60 bits) → mod P: the one
+    base-hash rule every word, gram and token hash uses."""
     return f"(CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT) % {P})"
 
 
 def word_hashes_sql(text: str) -> str:
     """Per-position word hash array: one md5 per word of the document,
-    ``transform(split(text, ' '), x -> base_hash(x))``."""
+    ``transform(split(text, ' '), x -> base_hash_sql(x))``."""
     return f"transform(split({text}, ' '), x -> {base_hash_sql('x')})"
 
 
@@ -516,7 +511,6 @@ def dedup_clusters(
     id1_col: str = "doc1",
     id2_col: str = "doc2",
     max_iters: int = 20,
-    strict: bool = True,
     method: str = "propagate",
 ) -> DataFrame:
     """Connected components over near-duplicate pairs → dedup clusters.
@@ -552,10 +546,10 @@ def dedup_clusters(
     Convergence is VERIFIED, not assumed: if labels are still changing
     when the iteration cap is hit, the returned clusters would be
     silently split (wrong connected components) — so the loop raises
-    (``strict=True``, default) or warns (``strict=False``) instead of
-    returning them. Near-dup components are shallow in practice; a
-    legitimate deep-chain workload should raise ``max_iters`` (cost is
-    one join + one groupBy per extra iteration).
+    instead of returning them. Near-dup components are shallow in
+    practice; a legitimate deep-chain workload should raise
+    ``max_iters`` (cost is one join + one groupBy per extra
+    iteration).
 
     Output: (doc_id, cluster_id, cluster_size, is_representative) for
     every doc that appears in at least one pair; cluster_id = min
@@ -625,15 +619,12 @@ def dedup_clusters(
         if changed == 0:
             break
     else:
-        msg = (
+        raise RuntimeError(
             f"dedup_clusters did not converge in max_iters={max_iters} "
             f"iterations ({changed} labels still propagating): some "
             "component's diameter exceeds the cap and its clusters "
             "would be split. Raise max_iters."
         )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     sizes = labels.groupBy("label").count()
     return (
         labels.join(sizes, "label")

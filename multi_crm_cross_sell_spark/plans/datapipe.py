@@ -30,10 +30,11 @@ from ..operators.dedup import (
     SIMHASH_MINBITS,
     SIMHASH_W_MARGIN,
     banded_simhash_doc_frame,
-    base_hash,
+    base_hash_sql,
     exact_duplicates,
     near_dup_pairs,
     simhash16_from_hashes,
+    word_hashes_sql,
 )
 from ..operators.similarity_search import (
     N_PLANES,
@@ -249,11 +250,10 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure column expressions, so the fingerprint costs one projection."""
     docs = load_table(spark, sf_dir, "documents")
     n_parts = spark.sparkContext.defaultParallelism * 2
-    hashed = docs.repartition(n_parts, F.col("doc_id")).select(
+    hashed = docs.repartition(n_parts, F.col("doc_id")).selectExpr(
         "doc_id",
-        F.transform(
-            F.array_distinct(F.split(F.col("text"), " ")), base_hash
-        ).alias("hs"),
+        f"transform(array_distinct(split(text, ' ')), x -> {base_hash_sql('x')})"
+        " AS hs",
     )
     return hashed.select(
         "doc_id", simhash16_from_hashes(F.col("hs")).alias("simhash")
@@ -1076,7 +1076,7 @@ def _ngram_jaccard_impl(
         .select(
             "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word")
         )
-        .select("doc_id", "pos", base_hash(F.col("word")).alias("h"))
+        .select("doc_id", "pos", F.expr(base_hash_sql("word")).alias("h"))
         .withColumn("h2", F.lead("h").over(wnd))
         .where(F.col("h2").isNotNull())
         .select(
@@ -1512,24 +1512,22 @@ def rolling_hash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both are pure column expressions — no shuffle, no Python."""
     docs = load_table(spark, sf_dir, "documents")
     n_parts = spark.sparkContext.defaultParallelism * 2
-    t = F.split(F.col("text"), " ")
-    grams = F.when(
-        F.size(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 3),
-            lambda i: F.array_join(F.slice(t, i + 1, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    t = "split(text, ' ')"
+    grams = (
+        f"CASE WHEN size({t}) >= 3 THEN transform(sequence(0, size({t}) - 3),"
+        f" i -> array_join(slice({t}, i + 1, 3), ' '))"
+        " ELSE CAST(array() AS array<string>) END"
+    )
     # Two projections on purpose: th/ghs are referenced several times
     # downstream (window lambda + size guards). As bound columns they
     # are hashed once per row; inlined into the window lambda they
     # would be re-hashed per WINDOW (measured 80x slower). Catalyst's
     # CollapseProject keeps this split because the producer exprs are
     # expensive and multiply referenced.
-    hashed = docs.repartition(n_parts, F.col("doc_id")).select(
+    hashed = docs.repartition(n_parts, F.col("doc_id")).selectExpr(
         "doc_id",
-        F.transform(t, base_hash).alias("th"),
-        F.transform(grams, base_hash).alias("ghs"),
+        f"{word_hashes_sql('text')} AS th",
+        f"transform({grams}, x -> {base_hash_sql('x')}) AS ghs",
     )
     rolling = F.aggregate(
         F.col("th"),
@@ -4264,7 +4262,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.col("text"), " ")).alias("w"),
     ).select(
         "doc_id",
-        (base_hash(F.col("w")) % _DSIR_BUCKETS).alias("b"),
+        F.expr(f"{base_hash_sql('w')} % {_DSIR_BUCKETS}").alias("b"),
         (F.col("source") == _DSIR_TARGET).alias("is_t"),
     )
     # buck (explode + md5 per token) feeds the bucket statistics AND

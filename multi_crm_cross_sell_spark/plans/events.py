@@ -269,8 +269,7 @@ def event_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _replay_as_stream(spark: SparkSession, events: DataFrame, op, output_mode: str,
                       prefix: str) -> DataFrame:
     """Land ``events`` as parquet, with ``ts`` as a plain timestamp
-    (the type the stateful operators' schemas declare) and
-    ``coalesce(2)`` (at most two files, never more partitions than
+    and ``coalesce(2)`` (at most two files, never more partitions than
     ``events`` has); stream it back one file per micro-batch through
     ``op`` with Trigger.AvailableNow; append every micro-batch's output
     to parquet and return what was emitted. The work dir is a fresh
@@ -365,18 +364,16 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, ts, user_id, event_type, value
     FROM events
     """,
-    tags=("streaming", "stateful", "dedup", "applyInPandasWithState", "ST3"),
+    tags=("streaming", "stateful", "dedup", "dropDuplicates", "ST3"),
 )
 def stateful_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exactly-once dedup (applyInPandasWithState,
-    streaming/stateful.stateful_dedup): per-event_id seen-state in the
-    state store suppresses re-deliveries across micro-batches — the
-    bounded-state answer to dropDuplicates' unbounded buffer
-    (streaming/stateful.py documents the TTL trade for 100 TB
-    streams). The harness doubles the events table (union of two
-    copies, so every id is re-delivered, many across batch
-    boundaries), streams it with Trigger.AvailableNow, and returns the
-    emitted rows — which must reproduce the original table exactly."""
+    """Streaming exactly-once dedup (streaming/stateful.stateful_dedup,
+    a streaming dropDuplicates on event_id): the JVM state store keeps
+    every id seen and suppresses re-deliveries across micro-batches.
+    The harness doubles the events table (union of two copies, so
+    every id is re-delivered, many across batch boundaries), streams
+    it with Trigger.AvailableNow, and returns the emitted rows — which
+    must reproduce the original table exactly."""
     from ..streaming.stateful import stateful_dedup
 
     ev = load_table(spark, sf_dir, "events")

@@ -88,8 +88,7 @@ class TestDedupClusters:
 
     def test_iteration_cap_detected_not_silent(self, spark):
         # A diameter-9 path cannot converge in 2 iterations; the loop
-        # must say so (raise by default, warn when strict=False), never
-        # return silently split clusters (ADVICE r3).
+        # must raise, never return silently split clusters (ADVICE r3).
         import pytest
 
         from multi_crm_cross_sell_spark.operators.dedup import dedup_clusters
@@ -99,9 +98,6 @@ class TestDedupClusters:
         )
         with pytest.raises(RuntimeError, match="did not converge"):
             dedup_clusters(pairs, max_iters=2)
-        with pytest.warns(RuntimeWarning, match="did not converge"):
-            rows = dedup_clusters(pairs, max_iters=2, strict=False).collect()
-        assert len(rows) == 10  # non-strict still returns the partial fold
 
 
 class TestSummarize:

@@ -182,6 +182,10 @@ def test_available_now_leaves_unset_partitions_unset(spark, tmp_path):
 
 
 def test_stateful_dedup_exactly_once(spark, events_dir, tmp_path):
+    """Two files of the same events run as two micro-batches: the second
+    batch emits nothing, so the dedup state carried across them. The
+    state lives in the JVM dedup operator, one state partition per
+    core, and no Python worker runs."""
     from multi_crm_cross_sell_spark.streaming.stateful import stateful_dedup
 
     src_dup = str(tmp_path / "dup_src")
@@ -197,10 +201,15 @@ def test_stateful_dedup_exactly_once(spark, events_dir, tmp_path):
         .option("path", out)
         .outputMode("append")
     )
-    available_now(spark, writer, str(tmp_path / "ck"))
+    q = available_now(spark, writer, str(tmp_path / "ck"))
     got = spark.read.parquet(out)
     assert got.count() == ev.count()
     assert got.select("event_id").distinct().count() == ev.count()
+    assert len(q.recentProgress) == 2
+    op = q.lastProgress["stateOperators"][0]
+    assert op["operatorName"] == "dedupe"
+    assert op["numShufflePartitions"] == spark.sparkContext.defaultParallelism
+    assert "pandas" not in q._jsq.explainInternal(True).lower()
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
@@ -268,13 +277,13 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir):
 
 
 def test_drop_duplicates_within_watermark_native(spark, events_dir, tmp_path):
-    """Native bounded-state streaming dedup (Spark 3.5+
-    dropDuplicatesWithinWatermark) must agree with the custom
-    applyInPandasWithState dedup's contract on the doubled stream:
-    every event_id exactly once. The native form is the
-    engine-managed twin of streaming/stateful.stateful_dedup — the
-    watermark bounds per-key state lifetime the way the custom op's
-    TTL does."""
+    """Bounded-state streaming dedup (Spark 3.5+
+    dropDuplicatesWithinWatermark) keeps the contract of
+    streaming/stateful.stateful_dedup on the doubled stream: every
+    event_id exactly once. It is the engine's form for a stream whose
+    dedup state must be bounded: the watermark drops a key from state
+    once event time has passed it, where stateful_dedup keeps every
+    key."""
     src = str(events_dir / "src")
     batch_df = spark.read.parquet(src)
     dup_src = str(tmp_path / "native_dup_src")

@@ -37,7 +37,7 @@ from multi_crm_cross_sell_spark.operators.dedup import (  # noqa: E402
     GRAM_K,
     P,
     banded_simhash_bands,
-    base_hash,
+    base_hash_sql,
 )
 from multi_crm_cross_sell_spark.session import get_spark  # noqa: E402
 from multi_crm_cross_sell_spark.sources.bronze import load_table  # noqa: E402
@@ -53,7 +53,7 @@ def gram_rows(spark, sf_dir):
     return (
         scoped.repartition(n_parts, F.col("doc_id"))
         .select("doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word"))
-        .select("doc_id", "pos", base_hash(F.col("word")).alias("h"))
+        .select("doc_id", "pos", F.expr(base_hash_sql("word")).alias("h"))
         .withColumn("h2", F.lead("h").over(wnd))
         .where(F.col("h2").isNotNull())
         .select("doc_id", ((F.col("h") * F.lit(GRAM_K) + F.col("h2")) % F.lit(P)).alias("g"))
