@@ -42,11 +42,10 @@ def ranking_metrics(
         F.row_number().over(w).alias("pos"),
         F.row_number().over(wi).alias("ideal_pos"),
     )
-    # ONE aggregation pass for every k (the er_threshold_sweep trick:
-    # all prefixes as conditional sums, reshaped with stack) — the
-    # per-k agg-then-union form re-ran the whole window pipeline once
-    # per k (3 ks × 4 scorers = 24 scans of the pair frame in
-    # ranking_eval_metrics' audited plan).
+    # ONE aggregation pass for every k: each prefix metric is a
+    # conditional sum in one aggregate, reshaped to a row per k with
+    # stack, so the window pipeline runs once whatever the number of
+    # ks (an aggregate per k unioned together re-runs it once per k).
     aggs = []
     for k in ks:
         aggs += [

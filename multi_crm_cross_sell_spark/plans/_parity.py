@@ -86,60 +86,73 @@ _OVERFLOW_MSG = (
 )
 
 
-def _guarded_unit_sum(c: Column, u: int) -> Column:
-    """try_sum of the long units with loud overflow traps on BOTH
-    surfaces: a per-row abs-compare raises before the (non-ANSI:
-    saturating) double→bigint cast can produce a finite wrong value,
-    and a NULL from try_sum over a non-empty group can then only mean
-    accumulator overflow, so it raises too.
+def _guarded_dsum_sql(expr: str, scale: str) -> str:
+    """The one guarded fixed-point sum, as a Spark SQL fragment (no
+    alias): the nearest-integer units of ``expr`` accumulated as bigint
+    with try_sum, cast to double and divided back once. It carries
+    loud overflow traps on BOTH surfaces: a per-row abs-compare raises
+    before the (non-ANSI: saturating) double→bigint cast can produce a
+    finite wrong value, and a NULL from try_sum over a non-empty group
+    can then only mean accumulator overflow, so it raises too. try_sum
+    is written twice textually, but Spark's aggregation planner
+    collapses identical aggregate expressions into one buffer.
 
-    The per-row compare runs on the RAW column against a precomputed
-    threshold 2^63·(1−2^-50)/u — not on the units expression, which
-    would evaluate the multiply twice per row (measured +0.5s on the
-    8-agg pricing pass at sf0.1; this form costs ~nothing over the
-    accumulator guard alone). The 2^-50 margin makes the check
-    CONSERVATIVE: if |c| < thr then the computed double c·u is
-    provably < 2^63 (one multiplication rounding of ≤2^-52 relative
+    The per-row compare runs on the RAW expression against a
+    precomputed threshold 2^63·(1−2^-50)/u — not on the units
+    expression, which would evaluate the multiply twice per row
+    (measured +0.5s on the 8-agg pricing pass at sf0.1; this form costs
+    ~nothing over the accumulator guard alone). The 2^-50 margin makes
+    the check CONSERVATIVE: if |x| < thr then the computed double x·u
+    is provably < 2^63 (one multiplication rounding of ≤2^-52 relative
     cannot bridge a 2^-50 gap), so silent saturation is impossible;
     values inside the ~8000-ulp sliver below the true bound raise a
     false-positive overflow — the safe direction for a guard.
 
-    Nearest-integer extraction is FLOOR(c·u + 0.5), not ROUND(c·u):
+    Nearest-integer extraction is FLOOR(x·u + 0.5), not ROUND(x·u):
     Spark's ROUND on DoubleType allocates a java.math.BigDecimal per
     row while FLOOR is one Math.floor intrinsic that already RETURNS
     long — measured 1.07s → 0.31s on the 6-sum pricing aggregate at
     sf0.1 (bit-identical output). The two differ only on exact-.5
     ties (HALF_UP rounds -2.5 away from zero to -3, floor(+0.5) gives
-    -2), and ties are unreachable here: c·u lands within ~1e-10 of an
+    -2), and ties are unreachable here: x·u lands within ~1e-10 of an
     integer n (the dsum contract: ≤ f fractional digits), so
-    c·u + 0.5 ∈ [n+0.5−1e-10, n+0.5+1e-10] and floor of that is
+    x·u + 0.5 ∈ [n+0.5−1e-10, n+0.5+1e-10] and floor of that is
     exactly n for positives AND negatives. The oracle keeps ROUND —
-    identical integers either way."""
+    identical integers either way. The multiply runs in doubles for
+    every input type: an integer column times an integer literal
+    overflows int at |x·u| >= 2^31, silently under non-ANSI, long
+    before the bigint accumulator's bound.
+
+    ISNAN is trapped EXPLICITLY: abs(NaN) >= thr is false, and
+    (long)Math.floor(NaN) is silently 0. NaN violates the dsum
+    contract (fixed-point-valued column), so it must stay loud.
+
+    NOT for oracle strings: DuckDB has no try_sum / raise_error and
+    needs no guard (SUM(BIGINT) widens to HUGEINT) — use
+    :func:`sql_dsum` there."""
+    if not isinstance(expr, str):
+        raise TypeError(
+            "dsum/davg take the summed expression as Spark SQL text, not a "
+            f"{type(expr).__name__}: write it as a string, e.g. "
+            "dsum('l_extendedprice * (1 - l_discount)', 'revenue')"
+        )
+    u = float(_units(scale))
     thr = (2.0**63) * (1.0 - 2.0**-50) / u
-    # isnan is trapped EXPLICITLY: abs(NaN) >= thr is false, and
-    # (long)Math.floor(NaN) is silently 0 — where the old ROUND path
-    # threw from BigDecimal.valueOf(NaN). NaN violates the dsum
-    # contract (fixed-point-valued column), so it must stay loud.
-    row = F.when(
-        (F.abs(c) >= F.lit(thr)) | F.isnan(c),
-        F.raise_error(F.lit(_OVERFLOW_MSG)).cast("bigint"),
-    ).otherwise(F.floor(c * u + F.lit(0.5)))
-    s = F.try_sum(row)
-    return F.when(
-        s.isNull() & (F.count(c) > 0),
-        F.raise_error(F.lit(_OVERFLOW_MSG)).cast("bigint"),
-    ).otherwise(s)
-
-
-def dsum(col: Column | str, alias: str, scale: str = MONEY) -> Column:
-    """Exact sum of a fixed-point-valued double column, emitted as
-    double: accumulate the nearest-integer units as bigint
-    (overflow-guarded), divide back once."""
-    c = F.col(col) if isinstance(col, str) else col
-    u = _units(scale)
-    return (_guarded_unit_sum(c, u).cast("double") / F.lit(float(u))).alias(
-        alias
+    raise_ = f"CAST(RAISE_ERROR('{_OVERFLOW_MSG}') AS BIGINT)"
+    row = (
+        f"CASE WHEN ABS({expr}) >= {thr!r}D OR ISNAN({expr}) THEN {raise_} "
+        f"ELSE FLOOR(({expr}) * {u}D + 0.5D) END"
     )
+    return (
+        f"CAST(CASE WHEN TRY_SUM({row}) IS NULL AND COUNT({expr}) > 0 "
+        f"THEN {raise_} ELSE TRY_SUM({row}) END AS DOUBLE) / {u}D"
+    )
+
+
+def dsum(expr: str, alias: str, scale: str = MONEY) -> Column:
+    """Exact sum of a fixed-point-valued double expression (Spark SQL
+    text), emitted as double: see :func:`_guarded_dsum_sql`."""
+    return F.expr(_guarded_dsum_sql(expr, scale)).alias(alias)
 
 
 def sql_dsum(expr: str, alias: str, scale: str = MONEY) -> str:
@@ -151,44 +164,15 @@ def sql_dsum(expr: str, alias: str, scale: str = MONEY) -> str:
 
 
 def spark_sql_dsum(expr: str, alias: str, scale: str = MONEY) -> str:
-    """Spark-SQL-dialect twin of :func:`dsum` for spark.sql-statement
-    plans (round-12 ADVICE): the SAME two loud overflow traps as
-    `_guarded_unit_sum`, as a SQL fragment. The round-12 flagship
-    rewrite inlined an UNGUARDED `SUM(CAST(FLOOR(x*100+0.5) AS
-    BIGINT))`, silently trading away the loud-on-both-surfaces
-    contract (NaN → floor gives 0; bigint accumulator wrap is silent
-    under non-ANSI). This fragment restores it: per-row abs/isnan
-    RAISE before the (non-ANSI: saturating) double→bigint cast, then
-    try_sum whose NULL over a non-empty group can only mean
-    accumulator overflow, so it raises too. try_sum is written twice
-    textually but Spark's aggregation planner collapses identical
-    aggregate expressions into one buffer — same physical shape as the
-    Column form. NOT for oracle strings: DuckDB has no try_sum /
-    raise_error and needs no guard (SUM(BIGINT) widens to HUGEINT) —
-    use :func:`sql_dsum` there."""
-    u = _units(scale)
-    thr = (2.0**63) * (1.0 - 2.0**-50) / u
-    row = (
-        f"CASE WHEN ABS({expr}) >= {thr!r}D OR ISNAN({expr}) "
-        f"THEN CAST(RAISE_ERROR('{_OVERFLOW_MSG}') AS BIGINT) "
-        f"ELSE FLOOR(({expr}) * {float(u)}D + 0.5D) END"
-    )
-    return (
-        f"CAST(CASE WHEN TRY_SUM({row}) IS NULL AND COUNT({expr}) > 0 "
-        f"THEN CAST(RAISE_ERROR('{_OVERFLOW_MSG}') AS BIGINT) "
-        f"ELSE TRY_SUM({row}) END AS DOUBLE) / {float(u)}D AS {alias}"
-    )
+    """:func:`dsum` as an aliased select-list item, for plans written
+    as one spark.sql statement."""
+    return f"{_guarded_dsum_sql(expr, scale)} AS {alias}"
 
 
-def davg(col: Column | str, alias: str, scale: str = FINE) -> Column:
-    """Exact-sum-based average: long-units sum→double, divided by the
-    unit factor and the count. Both engines divide identical doubles
-    by identical longs."""
-    c = F.col(col) if isinstance(col, str) else col
-    u = _units(scale)
-    return (
-        _guarded_unit_sum(c, u).cast("double") / F.lit(float(u)) / F.count(c)
-    ).alias(alias)
+def davg(expr: str, alias: str, scale: str = FINE) -> Column:
+    """Exact-sum-based average: the guarded sum divided by the count.
+    Both engines divide identical doubles by identical longs."""
+    return F.expr(f"{_guarded_dsum_sql(expr, scale)} / COUNT({expr})").alias(alias)
 
 
 def sql_davg(expr: str, alias: str, scale: str = FINE) -> str:

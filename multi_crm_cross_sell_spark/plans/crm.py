@@ -955,32 +955,34 @@ def score_explanations(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution, computed as column expressions over the flagship
     output — no model call, no Python. (Tree-model importances live in
     ml/ensemble.EnsembleModel.feature_importances; per-row SHAP for
-    tree members would ride mapInPandas with broadcast weights.)"""
+    tree members would ride mapInPandas with broadcast weights.)
+
+    Every column is computed in ONE projection over the flagship, so
+    the CASE repeats the rounded contributions. Spark plans LIMIT over
+    one projection over a sort as TakeOrderedAndProject. A second
+    projection stacked on the contributions is not collapsed into the
+    first (the CASE reads each contribution several times), and the
+    flagship's top-100 then runs as a global range-partitioned sort
+    under a CollectLimit: two more jobs and a shuffle
+    (SCALE.md §Round 20)."""
     recs = cross_sell_recommendations(spark, sf_dir)
-    c_seg = F.round(0.3 * F.col("same_segment"), 9)
-    c_size = F.round(0.25 * F.col("size_ratio"), 9)
-    c_act = F.round(0.25 * F.col("pair_activity"), 9)
-    c_spend = F.round(0.2 * F.col("spend_compat"), 9)
-    contrib = recs.select(
-        "account1_id", "account2_id", "score",
-        c_seg.alias("c_segment"),
-        c_size.alias("c_size"),
-        c_act.alias("c_activity"),
-        c_spend.alias("c_spend"),
+    seg, size, act, spend = (
+        "ROUND(0.3D * same_segment, 9)",
+        "ROUND(0.25D * size_ratio, 9)",
+        "ROUND(0.25D * pair_activity, 9)",
+        "ROUND(0.2D * spend_compat, 9)",
     )
-    top = (
-        F.when(
-            (F.col("c_segment") >= F.col("c_size"))
-            & (F.col("c_segment") >= F.col("c_activity"))
-            & (F.col("c_segment") >= F.col("c_spend")),
-            "same_segment",
-        )
-        .when(
-            (F.col("c_size") >= F.col("c_activity"))
-            & (F.col("c_size") >= F.col("c_spend")),
-            "size_ratio",
-        )
-        .when(F.col("c_activity") >= F.col("c_spend"), "pair_activity")
-        .otherwise("spend_compat")
+    return recs.selectExpr(
+        "account1_id",
+        "account2_id",
+        "score",
+        f"{seg} AS c_segment",
+        f"{size} AS c_size",
+        f"{act} AS c_activity",
+        f"{spend} AS c_spend",
+        f"""CASE WHEN {seg} >= {size} AND {seg} >= {act} AND {seg} >= {spend}
+                   THEN 'same_segment'
+                 WHEN {size} >= {act} AND {size} >= {spend} THEN 'size_ratio'
+                 WHEN {act} >= {spend} THEN 'pair_activity'
+                 ELSE 'spend_compat' END AS top_factor""",
     )
-    return contrib.select("*", top.alias("top_factor"))

@@ -200,9 +200,7 @@ def event_funnel_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_of("signup").alias("n_signups"),
         n_of("purchase").alias("n_purchases"),
         (n_of("purchase") > 0).cast("int").alias("converted"),
-        dsum(
-            F.when(F.col("event_type") == "purchase", F.col("value")), "purchase_value"
-        ),
+        dsum("CASE WHEN event_type = 'purchase' THEN value END", "purchase_value"),
     )
 
 

@@ -10,7 +10,7 @@ different orders); see plans/_parity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.bronze import load_table
@@ -85,93 +85,84 @@ def _ranking_oracle() -> str:
     return "WITH " + _LABELS_SQL + "," + ",".join(ranked_ctes) + " " + " UNION ALL ".join(selects)
 
 
+def _ranking_metrics_sql() -> str:
+    """The engine's ranking-metric statement, generated from
+    ``_SCORERS_SQL`` and ``_KS``. D-suffixed literals keep the
+    arithmetic in doubles (a bare ``0.0`` is a decimal in Spark SQL)."""
+    positions = ",\n".join(
+        f"ROW_NUMBER() OVER (ORDER BY {order_by}) AS pos_{s}"
+        for s, order_by in _SCORERS_SQL.items()
+    )
+
+    def disc(pos: str) -> str:
+        return f"CAST(ROUND(rel / LOG2({pos} + 1), 9) AS DECIMAL(27,12))"
+
+    aggs = []
+    items = []
+    for s in _SCORERS_SQL:
+        for k in _KS:
+            hits = f"CAST(SUM(CASE WHEN pos_{s} <= {k} THEN rel END) AS DOUBLE)"
+            aggs += [
+                f"{hits} / {k} AS _p_{s}_{k}",
+                f"{hits} / GREATEST(SUM(rel), 1) AS _r_{s}_{k}",
+                f"ROUND(CAST(SUM(CASE WHEN pos_{s} <= {k} THEN {disc(f'pos_{s}')} END)"
+                f" AS DOUBLE) / CAST(SUM(CASE WHEN ideal_pos <= {k}"
+                f" THEN {disc('ideal_pos')} END) AS DOUBLE), 9) AS _n_{s}_{k}",
+            ]
+            items.append(f"'{s}', {k}, _p_{s}_{k}, _r_{s}_{k}, _n_{s}_{k}")
+    aggs_sql = ",\n".join(aggs)
+    return f"""
+    WITH act AS (
+      SELECT o_custkey,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(23,2))) AS DOUBLE) AS total_spend,
+             MAX(CAST(o_orderdate AS DATE)) AS last_order_day,
+             MAX(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS rel
+      FROM {{o}} GROUP BY o_custkey
+    ),
+    labels AS (
+      SELECT c.c_custkey,
+             c.c_acctbal,
+             COALESCE(a.total_spend, 0.0D) AS total_spend,
+             COALESCE(DATEDIFF(DATE'2001-09-01', a.last_order_day), 365)
+               AS days_since_order,
+             COALESCE(a.rel, 0) AS rel
+      FROM {{c}} c LEFT JOIN act a ON c.c_custkey = a.o_custkey
+    ),
+    ranked AS (
+      SELECT rel,
+             {positions},
+             ROW_NUMBER() OVER (ORDER BY rel DESC, c_custkey) AS ideal_pos
+      FROM labels
+    ),
+    metrics AS (
+      SELECT {aggs_sql}
+      FROM ranked
+    )
+    SELECT stack({len(items)}, {", ".join(items)})
+           AS (scorer, k, precision_at_k, recall_at_k, ndcg_at_k)
+    FROM metrics
+    """
+
+
 @register("ranking_eval_metrics", oracle=_ranking_oracle(), tags=("ml", "W9", "W10", "ML13"))
 def ranking_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall/NDCG@{5,10,20} for three scorers (balance /
     spend / recency) against the fulfilled-order label — the
     evaluate.py metric table (README.md:82-96 shape) computed with
-    window expressions, no collect."""
+    window expressions, no collect.
+
+    ONE pass for all scorers AND all ks: one ``GROUP BY o_custkey``
+    yields spend, recency and the label together (one shuffle of
+    ``orders``); every scorer's position is a window over the SAME
+    labels frame; every (scorer, k) metric is a conditional sum in ONE
+    aggregate; and stack() reshapes the 1×27 row to the 9 output rows.
+    An aggregate per (scorer, k) unioned together re-runs the labels
+    pipeline 9 times. The plan is written as one parameterized
+    spark.sql statement: the same plan as a Column tree costs about
+    4,300 py4j calls to construct (SCALE.md §Round 20)."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
-    act = o.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(23,2)")).cast("double").alias("total_spend"),
-        F.max(F.col("o_orderdate").cast("date")).alias("last_order_day"),
-    )
-    rel = o.groupBy("o_custkey").agg(
-        F.max(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("rel")
-    ).withColumnRenamed("o_custkey", "rel_custkey")
-    labels = (
-        c.join(act, c.c_custkey == act.o_custkey, "left")
-        .join(rel, c.c_custkey == F.col("rel_custkey"), "left")
-        .select(
-            "c_custkey",
-            "c_acctbal",
-            F.coalesce("total_spend", F.lit(0.0)).alias("total_spend"),
-            F.coalesce(
-                F.datediff(F.lit("2001-09-01").cast("date"), F.col("last_order_day")),
-                F.lit(365),
-            ).alias("days_since_order"),
-            F.coalesce("rel", F.lit(0)).alias("rel"),
-        )
-    )
-
-    orders_by = {
-        "balance": [F.desc("c_acctbal"), F.asc("c_custkey")],
-        "spend": [F.desc("total_spend"), F.asc("c_custkey")],
-        "recency": [F.asc("days_since_order"), F.asc("c_custkey")],
-    }
-
-    def disc(rel_col: Column, pos_col: Column) -> Column:
-        return F.round(rel_col / F.log2(pos_col + 1), 9).cast("decimal(27,12)")
-
-    # ONE pass for all scorers AND all ks: every scorer's position is
-    # a window over the SAME labels frame (4 global sorts of one
-    # narrow (rel, keys) projection in a single pipeline), every
-    # (scorer, k) metric is a conditional sum in ONE aggregate, and
-    # stack() reshapes the 1×27 row to the 9 output rows. The
-    # agg-per-(scorer,k)-then-union form re-ran the labels join
-    # pipeline 9 times (24 parquet scans in the audited plan — the
-    # er_threshold_sweep lesson applied here).
-    wi = Window.orderBy(F.desc("rel"), F.asc("c_custkey"))
-    ranked = labels.select(
-        "rel",
-        *[
-            F.row_number().over(Window.orderBy(*order)).alias(f"pos_{s}")
-            for s, order in orders_by.items()
-        ],
-        F.row_number().over(wi).alias("ideal_pos"),
-    )
-    aggs = []
-    items = []
-    for s in orders_by:
-        pos = F.col(f"pos_{s}")
-        for k in _KS:
-            aggs += [
-                (F.sum(F.when(pos <= k, F.col("rel"))).cast("double") / k).alias(
-                    f"_p_{s}_{k}"
-                ),
-                (
-                    F.sum(F.when(pos <= k, F.col("rel"))).cast("double")
-                    / F.greatest(F.sum("rel"), F.lit(1))
-                ).alias(f"_r_{s}_{k}"),
-                F.round(
-                    F.sum(
-                        F.when(pos <= k, disc(F.col("rel"), pos))
-                    ).cast("double")
-                    / F.sum(
-                        F.when(
-                            F.col("ideal_pos") <= k,
-                            disc(F.col("rel"), F.col("ideal_pos")),
-                        )
-                    ).cast("double"),
-                    9,
-                ).alias(f"_n_{s}_{k}"),
-            ]
-            items.append(f"'{s}', {k}, _p_{s}_{k}, _r_{s}_{k}, _n_{s}_{k}")
-    return ranked.agg(*aggs).selectExpr(
-        f"stack({len(items)}, {', '.join(items)})"
-        " AS (scorer, k, precision_at_k, recall_at_k, ndcg_at_k)"
-    )
+    return spark.sql(_ranking_metrics_sql(), c=c, o=o)
 
 
 @register(

@@ -60,12 +60,10 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("l_quantity", "sum_qty"),
             dsum("l_extendedprice", "sum_base_price"),
             dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                "sum_disc_price",
-                "decimal(27,6)",
+                "l_extendedprice * (1 - l_discount)", "sum_disc_price", "decimal(27,6)"
             ),
             dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")),
+                "l_extendedprice * (1 - l_discount) * (l_tax + 1)",
                 "sum_charge",
                 "decimal(27,6)",
             ),
@@ -254,11 +252,7 @@ def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                "revenue",
-                "decimal(27,6)",
-            ),
+            dsum("l_extendedprice * (1 - l_discount)", "revenue", "decimal(27,6)"),
             F.count("*").alias("n_lineitems"),
             davg("l_discount", "avg_discount"),
         )

@@ -1,10 +1,10 @@
 """Overflow guard for the long-units parity path (plans/_parity.py).
 
-dsum/davg accumulate ROUND(x * 10^f) as BIGINT via TRY_SUM plus an
-explicit raise: try_sum returns NULL on long overflow in BOTH ANSI
-modes, and _guarded_unit_sum converts that NULL (on a non-empty
-group) into RAISE_ERROR — so a wrong-answer-by-wrap is impossible
-regardless of the deployment's spark.sql.ansi.enabled setting. The
+dsum/davg accumulate FLOOR(x * 10^f + 0.5) as BIGINT via TRY_SUM plus
+an explicit raise: try_sum returns NULL on long overflow in BOTH ANSI
+modes, and the guarded fragment (_guarded_dsum_sql) converts that NULL
+(on a non-empty group) into RAISE_ERROR — so a wrong-answer-by-wrap is
+impossible regardless of the deployment's spark.sql.ansi.enabled setting. The
 bound (|sum·10^f| < 2^63, crossed near sf ≈ 40 on lineitem sums with
 f=6) is documented in _parity.py; these tests pin:
 
@@ -22,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from multi_crm_cross_sell_spark.plans import all_queries
-from multi_crm_cross_sell_spark.plans._parity import dsum, spark_sql_dsum
+from multi_crm_cross_sell_spark.plans._parity import davg, dsum, spark_sql_dsum
 
 SF = "/root/testdata/sf0.01"
 
@@ -108,32 +108,72 @@ def test_single_row_cast_saturation_raises_loudly(spark, ansi):
             df.agg(dsum("x", "s")).collect()
 
 
-def _sql_dsum_agg(spark, df, scale="decimal(23,2)"):
-    return spark.sql(
-        f"SELECT {spark_sql_dsum('x', 's', scale)} FROM {{df}}", df=df
-    )
+def _guarded_sums(spark, df):
+    """dsum and davg as Column aggregates, and dsum again through a
+    spark.sql statement (the flagship's form)."""
+    return [
+        lambda: df.agg(dsum("x", "s")).collect(),
+        lambda: df.agg(davg("x", "s")).collect(),
+        lambda: spark.sql(
+            f"SELECT {spark_sql_dsum('x', 's')} FROM {{df}}", df=df
+        ).collect(),
+    ]
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
-def test_spark_sql_dsum_matches_column_form_and_raises(spark, ansi):
-    """round-12 ADVICE: the spark.sql-statement flagship must carry
-    the SAME guard contract as the Column form. Pin all three legs on
-    the SQL fragment itself: (1) below the bound it equals dsum
-    bit-for-bit, (2) a synthetic accumulator crossing raises in both
-    ANSI modes, (3) NaN raises instead of flooring to 0."""
+def test_guarded_sums_match_decimal_reference_and_raise(spark, ansi):
+    """Pin the guard contract on every entry point against an
+    independent exact reference, Spark's own decimal sum: (1) below the
+    bound dsum and davg equal CAST(SUM(CAST(x AS DECIMAL(38,f))) AS
+    DOUBLE) bit-for-bit, (2) a synthetic accumulator crossing raises
+    in both ANSI modes, (3) NaN raises instead of flooring to 0."""
     with _with_ansi(spark, ansi):
-        df = spark.range(5).select((F.col("id") * 1.37 + 0.01).alias("x"))
-        [via_sql] = _sql_dsum_agg(spark, df).collect()
-        [via_col] = df.agg(dsum("x", "s")).collect()
-        assert via_sql.s == via_col.s
+        df = spark.range(-7, 40).select((F.col("id") * 1.37 + 0.01).alias("x"))
+        [got] = df.agg(dsum("x", "dsum"), davg("x", "davg")).collect()
+        [ref] = df.selectExpr(
+            "CAST(SUM(CAST(x AS DECIMAL(38,2))) AS DOUBLE) AS dsum",
+            "CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE) / COUNT(x) AS davg",
+        ).collect()
+        assert (got.dsum, got.davg) == (ref.dsum, ref.davg)
+        [via_sql] = spark.sql(
+            f"SELECT {spark_sql_dsum('x', 's')} FROM {{df}}", df=df
+        ).collect()
+        assert via_sql.s == ref.dsum
+        # 3 rows of 4e16 at f=2 (and of 4e12 at f=6): each row passes
+        # the per-row compare, the unit sum 1.2e19 crosses 2^63. davg
+        # (f=6) over the 4e16 rows raises at the per-row compare.
         over = spark.range(3).select(F.lit(4.0e16).alias("x"))
-        with pytest.raises(Exception, match="long-units overflow"):
-            _sql_dsum_agg(spark, over).collect()
+        over_fine = spark.range(3).select(F.lit(4.0e12).alias("x"))
         nan = spark.range(2).select(
             F.when(F.col("id") == 0, float("nan")).otherwise(1.5).alias("x")
         )
+        for bad in (over, nan):
+            for run in _guarded_sums(spark, bad):
+                with pytest.raises(Exception, match="long-units overflow"):
+                    run()
         with pytest.raises(Exception, match="long-units overflow"):
-            _sql_dsum_agg(spark, nan).collect()
+            over_fine.agg(davg("x", "s")).collect()
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_integer_column_units_do_not_wrap(spark, ansi):
+    """The units multiply runs in doubles for every input type: an
+    integer column times an integer literal would overflow int at
+    |x·10^f| >= 2^31 (wrapping silently under non-ANSI) long before
+    the bigint accumulator's 2^63 bound."""
+    df = spark.range(2).select(F.lit(30_000_000).cast("int").alias("x"))
+    with _with_ansi(spark, ansi):
+        [row] = df.agg(dsum("x", "s")).collect()
+    assert row.s == 60_000_000.0
+
+
+def test_column_argument_names_the_fix():
+    """dsum/davg take SQL text. A Column would print in prefix form
+    (``*(l_extendedprice, -(1, l_discount))``) and fail later as a
+    parse error, so it is refused up front with the fix named."""
+    for fn in (dsum, davg):
+        with pytest.raises(TypeError, match="as Spark SQL text"):
+            fn(F.col("l_extendedprice") * (1 - F.col("l_discount")), "s")
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])

@@ -96,6 +96,30 @@ def test_flagship_pair_join_is_capped_cross_join(spark):
     assert plan.count("Window") >= 2
 
 
+def test_score_explanations_plans_a_top_k(spark):
+    # LIMIT over ONE projection over the flagship's sort plans as
+    # TakeOrderedAndProject (a per-partition partial top-100). A second
+    # stacked projection turns it into a CollectLimit over a global
+    # sort with a range-partitioned exchange: two more jobs and a
+    # shuffle. Read the final adaptive plan after an action.
+    df = all_queries()["score_explanations"].fn(spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "rangepartitioning" not in plan, plan
+    assert "CollectLimit" not in plan, plan
+
+
+def test_ranking_eval_metrics_aggregates_orders_once(spark):
+    # spend, recency and the label come from ONE GROUP BY o_custkey:
+    # one shuffle of orders, not one per label.
+    df = all_queries()["ranking_eval_metrics"].fn(spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    aggs = re.findall(r"Aggregate \[o_custkey#\d+L?\]", plan)
+    assert len(aggs) == 1, plan
+
+
 def test_topk_per_group_has_partial_windows(spark):
     plan = _plan(spark, "topk_per_group")
     # rank filter must stay a Window + Filter, not a global sort+limit
